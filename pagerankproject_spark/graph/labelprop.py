@@ -47,6 +47,18 @@ never pay for it); the changed flag rides the labels checkpoint, so
 the frontier is free. Early dense rounds keep the full recompute —
 restricting when ~everything changed only adds joins. Identical labels
 either way (asserted in tests).
+
+Below the driver-local threshold (graph/local.py `runs_local`: the
+same size and maxResultSize decision as `pagerank(spmv="auto")`) the
+same synchronous rounds run in numpy over the graph's shared
+driver-local copy — count (dst, label) pairs over both edge directions,
+keep the max-count label, ties by min url rank (the copy's `rank` is
+the same url order as rank_id) — unless the call asks for something
+only the distributed loop does (an explicit int `salt_buckets`,
+checkpoints or resume, non-default frontier arguments). `iterations`,
+per-round `changed` and `converged` are identical on both paths
+(tested); local metrics entries carry "mode": "local" where the
+distributed ones say "full" or "frontier".
 """
 
 from __future__ import annotations
@@ -54,12 +66,20 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass, field
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..ingest.edges import GraphTables, assign_url_ordered_ids
 from ..io.checkpoint import ParquetCheckpointer
 from ..session import loop_shuffle_partitions, no_aqe
+from . import local
+
+# frontier-mode defaults; a call that changes them asks for the
+# distributed loop's frontier restriction, so it never runs locally
+FRONTIER_THRESHOLD = 0.2
+FRONTIER_MIN_EDGES = 1_000_000
 
 
 @dataclass
@@ -79,9 +99,18 @@ def label_propagation(
     checkpoint_interval: int = 5,
     resume: bool = False,
     job_name: str = "lpa",
-    frontier_threshold: float = 0.2,
-    frontier_min_edges: int = 1_000_000,
+    frontier_threshold: float = FRONTIER_THRESHOLD,
+    frontier_min_edges: int = FRONTIER_MIN_EDGES,
 ) -> LPAResult:
+    if (
+        salt_buckets == "auto"
+        and checkpoint_dir is None
+        and not resume
+        and frontier_threshold == FRONTIER_THRESHOLD
+        and frontier_min_edges == FRONTIER_MIN_EDGES
+        and local.runs_local(spark, g)
+    ):
+        return _label_propagation_local(spark, g, max_iterations)
     P = g.num_partitions
     ranked = assign_url_ordered_ids(spark, g.vertices, P).persist()
     ids = g.weighted_edges.select("src_id", "dst_id")
@@ -258,6 +287,51 @@ def label_propagation(
     return LPAResult(
         labels=out,
         iterations=it - start_iter,
+        converged=converged,
+        metrics=metrics,
+    )
+
+
+def _label_propagation_local(
+    spark: SparkSession, g: GraphTables, max_iterations: int
+) -> LPAResult:
+    """The synchronous LPA rounds in numpy over `local.local_graph(g)`,
+    labels in url-rank space: count (dst, label) pairs over both edge
+    directions (self-loops and parallel edges count like in the
+    distributed join), then per dst the max count, ties by min rank."""
+    lg = local.local_graph(g)
+    n = max(g.n, 1)
+    s = np.concatenate([lg.src, lg.dst])
+    d = np.concatenate([lg.dst, lg.src])
+    lab = lg.rank.copy()
+    metrics: list[dict] = []
+    converged = False
+    while len(metrics) < max_iterations and not converged:
+        t0 = time.time()
+        keys, cnt = np.unique(d * n + lab[s], return_counts=True)
+        v, lv = np.divmod(keys, n)
+        # keys are sorted by (v, label) and lexsort is stable, so the
+        # first row of each v is its max count with the min label
+        order = np.lexsort((-cnt, v))
+        v, lv = v[order], lv[order]
+        first = np.ones(len(v), dtype=bool)
+        first[1:] = v[1:] != v[:-1]
+        new = lab.copy()
+        new[v[first]] = lv[first]
+        changed = int(np.count_nonzero(new != lab))
+        metrics.append(
+            {"i": len(metrics), "changed": changed, "mode": "local",
+             "wall_sec": time.time() - t0}
+        )
+        lab = new
+        converged = changed == 0
+    out = spark.createDataFrame(
+        pd.DataFrame({"url": lg.url, "label": lg.url_by_rank()[lab]}),
+        "url string, label string",
+    )
+    return LPAResult(
+        labels=out,
+        iterations=len(metrics),
         converged=converged,
         metrics=metrics,
     )

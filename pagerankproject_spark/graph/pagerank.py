@@ -48,6 +48,7 @@ from pyspark.sql import functions as F
 from ..ingest.edges import GraphTables
 from ..io.checkpoint import ParquetCheckpointer
 from ..session import loop_shuffle_partitions, no_aqe
+from . import local
 
 
 @dataclass
@@ -130,16 +131,22 @@ def pagerank(
       * "csr" — per-partition src-hashed CSR blocks + numpy kernels,
         cogrouped with distributed ranks (operator #8's fully-
         distributed physical layout; keeps vertex state sharded);
-      * "local" — collect the edge arrays to the driver once and
-        iterate in-process (numpy scatter-add). Spark's per-job floor
-        (~1 s/iteration) makes distributed iteration pointless below a
-        few million edges; this mode runs the SAME float64 equations at
-        memory speed (matches the reference's single-node throughput at
-        its own scale — BENCH.md). Requires the graph to fit on the
-        driver; checkpoint/resume not supported.
-      * "auto" — "local" when num_edges <= LOCAL_SPMV_MAX_EDGES (and
-        the collect fits maxResultSize), else "blocks" when the vertex
-        state fits the driver budget, else "dataframe".
+      * "local" — iterate in-process (numpy scatter-add) over the
+        graph's shared driver-local copy (graph/local.py `local_graph`:
+        collected once per GraphTables and reused by connected
+        components and label propagation on the same graph). Spark's
+        per-job floor (~1 s/iteration) makes distributed iteration
+        pointless below a few million edges; this mode runs the SAME
+        float64 equations at memory speed (matches the reference's
+        single-node throughput at its own scale — BENCH.md). Requires
+        the collect to fit maxResultSize (graph/local.py
+        `collect_fits`); checkpoint/resume not supported. Metrics
+        entries carry "mode": "local".
+      * "auto" — "local" when graph/local.py `runs_local` says the
+        graph fits (num_edges <= LOCAL_SPMV_MAX_EDGES and the collect
+        fits maxResultSize — the same decision CC and LPA take), else
+        "blocks" when the vertex state fits the driver budget, else
+        "dataframe".
     Same numbers in every mode (tested)."""
     n = g.n
     # Guard the full-edge-table collect BEFORE running any job: an
@@ -147,13 +154,12 @@ def pagerank(
     # collect on spark.driver.maxResultSize with an opaque Py4J error
     # (round-1 verdict item 4). 'auto' falls back to the distributed
     # path instead of raising.
-    limit = _max_result_bytes(spark)
-    local_fits = limit == 0 or _local_collect_estimate(g) <= limit
+    limit = local._max_result_bytes(spark)
     # blocks mode holds ~5 n-sized float64 arrays on the driver and
     # collects the n-row base once: budget n*40 B against maxResultSize
     blocks_fits = limit == 0 or 40 * g.n <= limit
     if spmv == "auto":
-        if g.num_edges <= LOCAL_SPMV_MAX_EDGES and local_fits:
+        if local.runs_local(spark, g):
             spmv = "local"
         elif blocks_fits:
             spmv = "blocks"
@@ -166,22 +172,22 @@ def pagerank(
             f"(~{limit >> 20} MiB). Use spmv='dataframe' (fully "
             f"distributed), or raise the conf."
         )
-    elif spmv == "local" and not local_fits:
+    elif spmv == "local" and not local.collect_fits(spark, g):
         raise ValueError(
-            f"spmv='local' would collect ~{_local_collect_estimate(g) >> 20} "
-            f"MiB of edge/vertex arrays to the driver, above "
-            f"spark.driver.maxResultSize (~{limit >> 20} MiB). Use "
-            f"spmv='dataframe' (distributed), or raise "
-            f"spark.driver.maxResultSize if the graph truly fits driver "
-            f"memory."
+            f"spmv='local' would collect "
+            f"~{local._local_collect_estimate(g) >> 20} MiB of edge/vertex "
+            f"arrays to the driver, above spark.driver.maxResultSize "
+            f"(~{limit >> 20} MiB). Use spmv='dataframe' (distributed), or "
+            f"raise spark.driver.maxResultSize if the graph truly fits "
+            f"driver memory."
         )
-    base, d_cnt = _build_base(g, v_expr)
     if spmv == "local":
         if checkpoint_dir or resume:
             raise ValueError("spmv='local' does not support checkpoint/resume")
         return _pagerank_local(
-            spark, g, base, alpha, epsilon, max_iterations, x0_ranks
+            spark, g, v_expr, alpha, epsilon, max_iterations, x0_ranks
         )
+    base, d_cnt = _build_base(g, v_expr)
     if spmv == "blocks":
         return _pagerank_blocks(
             spark, g, base, alpha, epsilon, max_iterations, x0_ranks,
@@ -285,62 +291,45 @@ def pagerank(
     )
 
 
-# above this, distributed iteration is worth its per-job latency;
-# below, one driver-local numpy loop beats the cluster (measured).
-LOCAL_SPMV_MAX_EDGES = 5_000_000
-
-_SIZE_SUFFIX = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
-
-
-def _max_result_bytes(spark: SparkSession) -> int:
-    """spark.driver.maxResultSize as bytes; 0 = unlimited."""
-    raw = str(spark.conf.get("spark.driver.maxResultSize", "1g")).strip().lower()
-    for suf in ("b", ""):
-        for k, mult in _SIZE_SUFFIX.items():
-            if raw.endswith(k + suf) and raw[: -len(k + suf)].strip().isdigit():
-                return int(raw[: -len(k + suf)].strip()) * mult
-    return int(raw) if raw.isdigit() else 1 << 30
-
-
-def _local_collect_estimate(g: GraphTables) -> int:
-    """Arrow-columnar bytes toPandas() must pull for spmv='local':
-    (src,dst,weight) = 24 B/edge plus the (id,v,is_dangling) base rows."""
-    return 24 * g.num_edges + 24 * g.n
-
-
 def _pagerank_local(
     spark: SparkSession,
     g: GraphTables,
-    base: DataFrame,
+    v_expr: Column | None,
     alpha: float,
     epsilon: float,
     max_iterations: int,
     x0_ranks: DataFrame | None,
 ) -> PageRankResult:
-    """Driver-local iteration: one collect of the edge arrays + base,
-    then the exact float64 equations of the distributed loop (same as
-    oracle/numpy_ref.power_method) at memory speed."""
+    """Driver-local iteration over the shared driver copy of the graph
+    (graph/local.py; collected once per GraphTables), then the exact
+    float64 equations of the distributed loop (same as
+    oracle/numpy_ref.power_method) at memory speed. The dangling
+    indicator comes from the edge arrays; only a personalization
+    vector needs a job of its own."""
     import numpy as np
+    import pandas as pd
 
     n = g.n
-    edges_pd = g.weighted_edges.select("src_id", "dst_id", "weight").toPandas()
-    base_pd = base.select("id", "v", "is_dangling").toPandas()
+    lg = local.local_graph(g)
+    src, dst, w = lg.src, lg.dst, lg.weight
+    a = (np.bincount(src, minlength=n) == 0).astype(np.float64)
+    if v_expr is None:
+        v = np.full(n, 1.0 / math.sqrt(n), dtype=np.float64)
+    else:
+        v_pd = g.vertices.select(
+            "id", v_expr.cast("double").alias("v")
+        ).toPandas()
+        v = np.zeros(n, dtype=np.float64)
+        v[v_pd["id"].to_numpy()] = v_pd["v"].to_numpy()
+        if not v.sum() > 0:
+            raise ValueError("personalization vector sums to 0")
+        v = v / np.linalg.norm(v)
 
-    v = np.zeros(n, dtype=np.float64)
-    v[base_pd["id"].to_numpy()] = base_pd["v"].to_numpy()  # already unit-L2
-    a = np.zeros(n, dtype=np.float64)
-    a[base_pd.loc[base_pd["is_dangling"], "id"].to_numpy()] = 1.0
-    src = edges_pd["src_id"].to_numpy()
-    dst = edges_pd["dst_id"].to_numpy()
-    w = edges_pd["weight"].to_numpy()
-
+    x = np.full(n, 1.0 / math.sqrt(n), dtype=np.float64)
     if x0_ranks is not None:
-        x = np.full(n, 1.0 / math.sqrt(n), dtype=np.float64)
         x0_pd = x0_ranks.toPandas()
         x[x0_pd["id"].to_numpy()] = x0_pd["x"].to_numpy()
         x = x / np.linalg.norm(x)
-    else:
-        x = np.full(n, 1.0 / math.sqrt(n), dtype=np.float64)
 
     residuals: list[float] = []
     metrics: list[dict] = []
@@ -357,19 +346,19 @@ def _pagerank_local(
         residuals.append(residual)
         metrics.append(
             {"i": i, "residual": residual, "dangling_mass": dm,
-             "edges": g.num_edges, "wall_sec": time.time() - t0}
+             "edges": g.num_edges, "mode": "local",
+             "wall_sec": time.time() - t0}
         )
         if residual < epsilon:
             converged = True
             break
 
-    import pandas as pd
-
-    ranks_pd = pd.DataFrame({"id": np.arange(n, dtype=np.int64), "x": x})
-    ranks = spark.createDataFrame(ranks_pd)
-    out = base.select("id", "url").join(ranks, "id")
+    ranks = spark.createDataFrame(
+        pd.DataFrame({"id": np.arange(n, dtype=np.int64), "url": lg.url, "x": x}),
+        "id long, url string, x double",
+    )
     return PageRankResult(
-        ranks=out,
+        ranks=ranks,
         iterations=len(residuals),
         residuals=residuals,
         converged=converged,

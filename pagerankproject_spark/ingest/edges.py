@@ -22,7 +22,7 @@ key, persisted once and reused by every iterative algorithm.
 from __future__ import annotations
 
 import math
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -123,8 +123,13 @@ class GraphTables:
     # when set (the ratio threshold is frozen at build-time n; salt adds
     # a column the delta path doesn't reproduce).
     build_filters: dict | None = None
+    # driver-local copy (graph/local.py LocalGraph), collected on first
+    # use by a local-path loop; not an init field, so a copy made with
+    # dataclasses.replace never inherits another graph's arrays
+    _local: object = field(default=None, init=False, repr=False, compare=False)
 
     def unpersist(self) -> None:
+        self._local = None
         for df in (self.vertices, self.weighted_edges):
             try:
                 df.unpersist()

@@ -212,6 +212,10 @@ def decode_jpeg(payload: bytes) -> tuple[int, int, int, bytearray]:
         if marker in (0x01,) or 0xD0 <= marker <= 0xD7:
             continue  # standalone
         seglen = int.from_bytes(payload[pos : pos + 2], "big")
+        # the length counts its own two bytes; anything shorter would
+        # never advance pos past the segment
+        if seglen < 2 or pos + seglen > n:
+            raise ValueError("corrupt JPEG: bad segment length")
         seg = payload[pos + 2 : pos + seglen]
         if marker == 0xDB:  # DQT (possibly several tables)
             p = 0

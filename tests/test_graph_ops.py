@@ -20,7 +20,7 @@ from pagerankproject_spark.graph.triangles import triangle_counts
 from pagerankproject_spark.ingest.edges import build_graph_tables
 from pagerankproject_spark.oracle import numpy_ref as oracle
 
-from .conftest import edges_df
+from .conftest import edges_df, forced_distributed, on_both_paths
 
 
 def _tables(spark, pairs, **kw):
@@ -29,7 +29,9 @@ def _tables(spark, pairs, **kw):
 
 def test_connected_components_two_components(spark):
     g = _tables(spark, TWO_COMPONENTS_EDGES)
-    res = connected_components(spark, g)
+    res = on_both_paths(
+        lambda: connected_components(spark, g), lambda r: r.components
+    )
     got = {r["url"]: r["component"] for r in res.components.collect()}
     # note: isolated vertex "f" never appears in the edge table, so the
     # engine's vertex set is {a..e} (the reference builds its vertex set
@@ -46,12 +48,23 @@ def test_connected_components_clustered_matches_oracle(spark):
     expected = oracle.connected_components(pairs)
     assert got == expected
     assert len(set(got.values())) == k
+    # the unsalted default runs on the driver and walks the same rounds
+    plain = connected_components(spark, g)
+    assert {m["mode"] for m in plain.metrics} == {"local"}
+    assert {r["url"]: r["component"] for r in plain.components.collect()} == got
+    assert plain.iterations == res.iterations and plain.converged
+    assert [m["changed"] for m in plain.metrics] == [
+        m["changed"] for m in res.metrics
+    ]
 
 
 def test_lpa_two_cliques(spark):
     pairs = make_two_cliques_bridge(k=5)
     g = _tables(spark, pairs)
-    res = label_propagation(spark, g, max_iterations=20)
+    res = on_both_paths(
+        lambda: label_propagation(spark, g, max_iterations=20),
+        lambda r: r.labels,
+    )
     got = {r["url"]: r["label"] for r in res.labels.collect()}
     expected = oracle.label_propagation(pairs, max_iterations=20)
     assert got == expected
@@ -60,7 +73,10 @@ def test_lpa_two_cliques(spark):
 def test_lpa_weblike_matches_oracle(spark):
     pairs = make_weblike(seed=5, n_nodes=120, m_edges=900)
     g = _tables(spark, pairs)
-    res = label_propagation(spark, g, max_iterations=8)
+    res = on_both_paths(
+        lambda: label_propagation(spark, g, max_iterations=8),
+        lambda r: r.labels,
+    )
     got = {r["url"]: r["label"] for r in res.labels.collect()}
     expected = oracle.label_propagation(
         [e for e in _post_regex(pairs)], max_iterations=8
@@ -443,7 +459,7 @@ def test_twophase_cc_path_graph_logarithmic_rounds(spark):
     g.unpersist()
 
 
-def test_auto_cc_picks_contraction_on_chain(spark):
+def test_auto_cc_picks_contraction_on_chain(spark, distributed):
     """High-diameter input: the probe's changed-count stays near-flat
     (only the frontier moves on a path), so auto must hand off to star
     contraction and still produce the exact union-find labels in far
@@ -463,7 +479,7 @@ def test_auto_cc_picks_contraction_on_chain(spark):
     g.unpersist()
 
 
-def test_auto_cc_stays_minlabel_on_low_diameter(spark):
+def test_auto_cc_stays_minlabel_on_low_diameter(spark, distributed):
     """Low-diameter input: propagation converges inside the probe (or
     its changed-count collapses), so auto never pays the contraction
     rounds and the output is still exact."""
@@ -479,7 +495,7 @@ def test_auto_cc_stays_minlabel_on_low_diameter(spark):
     g.unpersist()
 
 
-def test_auto_cc_warm_start_branch_exact(spark):
+def test_auto_cc_warm_start_branch_exact(spark, distributed):
     """Mid case: not converged inside a tiny probe but decaying — auto
     continues min-label from the probe's labels (init_labels path) and
     the result is still exact with no contraction rounds."""
@@ -2263,3 +2279,116 @@ def test_coloring_auto_matches_replay_and_phase_pick(spark):
 
     with _pytest.raises(ValueError, match="no edges"):
         coloring_auto(spark, edges_df(spark, [("a", "a")]))
+
+
+def test_cc_and_lpa_hit_the_cap_identically_on_both_paths(spark):
+    """A 12-vertex path: CC capped below its diameter and LPA, which
+    oscillates on a path, both stop at max_iterations with
+    converged=False — and the driver-local and distributed paths stop
+    with the same labels, rounds and per-round changed counts."""
+    pairs = [(f"q{i:02d}.x", f"q{i+1:02d}.x") for i in range(11)]
+    g = _tables(spark, pairs)
+    cc = on_both_paths(
+        lambda: connected_components(spark, g, max_iterations=3),
+        lambda r: r.components,
+    )
+    assert cc.iterations == 3 and not cc.converged
+    lpa = on_both_paths(
+        lambda: label_propagation(spark, g, max_iterations=4),
+        lambda r: r.labels,
+    )
+    assert lpa.iterations == 4 and not lpa.converged
+    got = {r["url"]: r["label"] for r in lpa.labels.collect()}
+    assert got == oracle.label_propagation(pairs, max_iterations=4)
+    g.unpersist()
+
+
+def test_auto_cc_local_converges_on_chain_longer_than_the_cap(spark):
+    """Below the local threshold auto makes no probe decision and no
+    star-contraction hand-off: after the probe's plain min-label rounds
+    it adds root hooking and pointer jumping, and converges on a
+    300-vertex chain (longer than probe_rounds AND max_iterations) in a
+    few more rounds, with the union-find labels. The chain's vertex
+    names are shuffled so ids follow no path order; a clustered graph
+    rides along as more components."""
+    import random
+
+    from pagerankproject_spark.graph.components import connected_components_auto
+
+    names = [f"c{i:04d}.x" for i in range(300)]
+    random.Random(5).shuffle(names)
+    pairs = list(zip(names, names[1:]))
+    extra, _ = make_clustered_random(seed=3, k_clusters=4, n=80, p_in=0.1)
+    g = _tables(spark, pairs + extra)
+    res = connected_components_auto(
+        spark, g, max_iterations=50, probe_rounds=8
+    )
+    got = {r["url"]: r["component"] for r in res.components.collect()}
+    assert got == oracle.connected_components(pairs + extra)
+    assert res.converged
+    assert res.iterations <= 20, res.metrics
+    assert {m["algo"] for m in res.metrics} == {"local"}
+    assert {m["mode"] for m in res.metrics} == {"local"}
+    g.unpersist()
+
+
+def test_local_path_tags_mode_and_shares_one_collect(spark):
+    """PageRank (spmv="auto"), CC, auto CC and LPA on one small graph
+    all run on the driver, tag every metrics entry "mode": "local"
+    (auto also "algo": "local"), and share the one driver-local copy
+    of the graph, which g.unpersist() drops. The graph converges
+    inside auto's probe, so the distributed auto walks the same
+    rounds."""
+    from pagerankproject_spark.graph import local
+    from pagerankproject_spark.graph.components import connected_components_auto
+    from pagerankproject_spark.graph.pagerank import pagerank
+
+    g = _tables(spark, TWO_COMPONENTS_EDGES)
+    pr = pagerank(spark, g, epsilon=1e-9, spmv="auto")
+    lg = local.local_graph(g)
+    cc = connected_components(spark, g)
+    auto = connected_components_auto(spark, g)
+    lpa = label_propagation(spark, g)
+    assert local.local_graph(g) is lg
+    for res in (pr, cc, auto, lpa):
+        assert res.metrics and {m["mode"] for m in res.metrics} == {"local"}
+    assert {m["algo"] for m in auto.metrics} == {"local"}
+    with forced_distributed():
+        dist = connected_components_auto(spark, g)
+    assert [m["changed"] for m in dist.metrics] == [
+        m["changed"] for m in auto.metrics
+    ]
+    assert sorted(dist.components.collect()) == sorted(auto.components.collect())
+    g.unpersist()
+    assert g._local is None
+
+
+def test_local_url_rank_matches_spark_url_order(spark):
+    """The driver copy's url rank (a Python str sort: code-point order,
+    which is UTF-8 byte order) equals assign_url_ordered_ids's rank_id
+    on non-ASCII, mixed-case and shared-prefix urls — including a
+    supplementary-plane character, where UTF-16 order would differ —
+    so LPA ties decided by min url agree between the two paths."""
+    from pagerankproject_spark.graph import local
+    from pagerankproject_spark.ingest.edges import assign_url_ordered_ids
+
+    leaves = [
+        "x", "X", "xa", "xA", "xá", "xé", "xe", "x€", "x\U0001F600",
+        "x\uFF21", "Äx", "äx", "ax", "éx", "xab", "xa\u0301",
+    ]
+    # a star: the hub sees every leaf label once, so each round's
+    # winner at the hub is decided purely by the min-url tie-break
+    pairs = [("hub.é", leaf) for leaf in leaves]
+    g = _tables(spark, pairs)
+    ranked = assign_url_ordered_ids(spark, g.vertices, g.num_partitions)
+    want = {r["id"]: r["rank_id"] for r in ranked.collect()}
+    lg = local.local_graph(g)
+    assert {i: int(lg.rank[i]) for i in range(g.n)} == want
+    assert list(lg.url_by_rank()) == sorted(leaves + ["hub.é"])
+    res = on_both_paths(
+        lambda: label_propagation(spark, g, max_iterations=3),
+        lambda r: r.labels,
+    )
+    got = {r["url"]: r["label"] for r in res.labels.collect()}
+    assert got == oracle.label_propagation(pairs, max_iterations=3)
+    g.unpersist()

@@ -51,6 +51,30 @@ def test_restart_markers_roundtrip():
     assert max(abs(a - b) for a, b in zip(pix, buf)) <= 2
 
 
+def test_zero_segment_length_raises_promptly():
+    """A marker segment whose length field is below its own two bytes
+    (here 0) is corrupt: the decoder raises ValueError at once instead
+    of re-reading the same position."""
+    import threading
+
+    jp = encode_jpeg_gray(8, 8, _px("z", 64))
+    bad = jp[:2] + b"\xff\xe0\x00\x00" + jp[2:]
+    caught: list[BaseException] = []
+
+    def run():
+        try:
+            decode_jpeg(bad)
+        except BaseException as e:  # handed to the test thread below
+            caught.append(e)
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    t.join(timeout=10)
+    assert not t.is_alive(), "decode_jpeg hung on a zero segment length"
+    assert len(caught) == 1 and isinstance(caught[0], ValueError), caught
+    assert "bad segment length" in str(caught[0])
+
+
 def test_color_roundtrips():
     rgb = _px("c", 16 * 16 * 3)
     w, h, c, buf = decode_jpeg(encode_jpeg_rgb(16, 16, rgb, "444"))

@@ -174,22 +174,32 @@ def test_blocks_spmv_checkpoint_resume(spark, tmp_path):
 
 def test_local_spmv_guarded_against_max_result_size(spark, monkeypatch):
     """Explicit spmv='local' beyond the maxResultSize budget fails fast
-    with a clear message (no opaque Py4J collect error); spmv='auto'
-    silently takes the distributed path instead."""
+    with a clear message (no opaque Py4J collect error); spmv='auto',
+    connected components and label propagation silently take the
+    distributed path instead (one shared guard, graph/local.py)."""
     import pagerankproject_spark.graph.pagerank as pr_mod
     from fixtures.graphs import SMALL_GRAPH_EDGES
+    from pagerankproject_spark.graph import local
+    from pagerankproject_spark.graph.components import connected_components
+    from pagerankproject_spark.graph.labelprop import label_propagation
     from pagerankproject_spark.ingest.edges import build_graph_tables
 
     from .conftest import edges_df
 
     g = build_graph_tables(spark, edges_df(spark, SMALL_GRAPH_EDGES))
-    monkeypatch.setattr(pr_mod, "_max_result_bytes", lambda _s: 64)
+    monkeypatch.setattr(local, "_max_result_bytes", lambda _s: 64)
 
     with pytest.raises(ValueError, match="maxResultSize"):
         pr_mod.pagerank(spark, g, epsilon=1e-6, max_iterations=5, spmv="local")
 
     res = pr_mod.pagerank(spark, g, epsilon=1e-6, max_iterations=5, spmv="auto")
     assert res.ranks.count() == g.n  # fell back to the distributed loop
+    assert "local" not in {m.get("mode") for m in res.metrics}
+    cc = connected_components(spark, g, max_iterations=2)
+    lpa = label_propagation(spark, g, max_iterations=2)
+    for r in (cc, lpa):
+        assert "local" not in {m.get("mode") for m in r.metrics}
+    assert g._local is None  # nothing was collected
     g.unpersist()
 
 

@@ -17,7 +17,7 @@ from __future__ import annotations
 from hypothesis import HealthCheck, assume, given, settings
 from hypothesis import strategies as st
 
-from .conftest import edges_df
+from .conftest import edges_df, on_both_paths
 from pagerankproject_spark.oracle import numpy_ref as oracle
 
 VERTS = [f"v{i}" for i in range(10)]
@@ -49,15 +49,40 @@ def _simple(pairs):
 @FUZZ
 @given(pairs=edges_strategy)
 def test_fuzz_connected_components(spark, pairs):
-    from pagerankproject_spark.graph.components import connected_components
+    from pagerankproject_spark.graph.components import (
+        connected_components,
+        connected_components_auto,
+    )
 
     g = _tables(spark, pairs)
     try:
-        res = connected_components(spark, g)
+        res = on_both_paths(
+            lambda: connected_components(spark, g), lambda r: r.components
+        )
         got = {r["url"]: r["component"] for r in res.components.collect()}
+        auto = connected_components_auto(spark, g)
+        got_auto = {r["url"]: r["component"] for r in auto.components.collect()}
     finally:
         g.unpersist()
     assert got == oracle.connected_components(pairs)
+    assert got_auto == got
+
+
+@FUZZ
+@given(pairs=edges_strategy)
+def test_fuzz_label_propagation(spark, pairs):
+    from pagerankproject_spark.graph.labelprop import label_propagation
+
+    g = _tables(spark, pairs)
+    try:
+        res = on_both_paths(
+            lambda: label_propagation(spark, g, max_iterations=5),
+            lambda r: r.labels,
+        )
+        got = {r["url"]: r["label"] for r in res.labels.collect()}
+    finally:
+        g.unpersist()
+    assert got == oracle.label_propagation(pairs, max_iterations=5)
 
 
 @FUZZ
