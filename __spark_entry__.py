@@ -320,14 +320,15 @@ def q_pagerank_personalized(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_pagerank_csr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """North-rule CSR-block SpMV path (ingest/csr.py)."""
+    """North-rule CSR-block SpMV path: spmv="blocks", the dst-partitioned
+    on-disk CSR blocks of ingest/csr.py."""
     from pagerankproject_spark.graph.pagerank import pagerank
     from pagerankproject_spark.ingest.edges import build_graph_tables as bgt
 
     g = bgt(spark, _edges(spark, sf_dir))
-    return pagerank(spark, g, epsilon=1e-4, max_iterations=30, spmv="csr").ranks.select(
-        "url", F.round("x", 6).alias("x")
-    )
+    return pagerank(
+        spark, g, epsilon=1e-4, max_iterations=30, spmv="blocks"
+    ).ranks.select("url", F.round("x", 6).alias("x"))
 
 
 def q_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -603,10 +603,10 @@ def main() -> None:
         "cogroup exchange ships the full block table through Arrow every",
         "iteration, which erases the sort-once advantage in local mode; the",
         "DataFrame path stays entirely inside whole-stage codegen on cached",
-        "columnar batches. Conclusion (kept): `spmv=\"dataframe\"` is the default;",
-        "the CSR layout remains the persisted physical format story (bucketed",
-        "block tables avoid the per-iteration exchange on a real cluster) and is",
-        "tested for exact numeric agreement (tests/test_csr.py).",
+        "columnar batches. Conclusion: the src-hashed `spmv=\"csr\"` mode lost",
+        "everywhere it was measured and was removed; the CSR layout lives on",
+        "as the dst-partitioned on-disk blocks of `spmv=\"blocks\"`",
+        "(`ingest/csr.py`), tested for parity in tests/test_pagerank_parity.py.",
         "",
     ]
     # regenerate ONLY the scaling-harness-owned head; preserve the

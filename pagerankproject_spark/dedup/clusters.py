@@ -4,18 +4,17 @@ one survivor per cluster. The step between pair generation
 duplicates (A~B, B~C) must collapse into ONE cluster even when (A,C)
 was never emitted as a pair.
 
-Min-id label propagation directly on the long doc ids (same iterative
-shape as graph/components.py, without the url detour): per iteration
-one join + one combinable MIN aggregate, changed-count riding the
-localCheckpoint as an Observation, lineage truncated every iteration.
-Survivor = min doc_id per cluster (same keep-rule as dedup_exact).
+Components come from graph/components.py `min_label_fixpoint` run
+directly on the symmetrized long doc ids (no url detour). Survivor =
+min doc_id per cluster (same keep-rule as dedup_exact).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..graph.components import min_label_fixpoint
 from ..session import no_aqe
 
 
@@ -24,7 +23,7 @@ def dedup_clusters(
     pairs: DataFrame,
     a_col: str = "a",
     b_col: str = "b",
-    max_iterations: int = 50,
+    max_iterations: int = 100,
 ) -> DataFrame:
     """(a, b) near-dup pairs -> (doc_id, cluster_id, is_survivor).
 
@@ -32,6 +31,8 @@ def dedup_clusters(
     marks that minimum. Docs never appearing in a pair are their own
     singleton cluster by definition and are NOT emitted (join the
     output back onto the corpus with a coalesce to keep singletons).
+    Raises RuntimeError when a chain of pairs is longer than
+    `max_iterations` rounds can settle.
     """
     P = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     e = pairs.select(
@@ -46,40 +47,11 @@ def dedup_clusters(
         sym.select(F.col("src").alias("id"))
         .distinct()
         .select("id", F.col("id").alias("label"))
-        .repartition(P, "id")
-        .localCheckpoint(eager=True)
     )
     with no_aqe(spark):
-        for _ in range(max_iterations):
-            msgs = (
-                sym.join(labels, sym.src == labels.id)
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.min("label").alias("min_in"))
-            )
-            obs = Observation()
-            staged = (
-                labels.join(msgs, "id", "left")
-                .select(
-                    "id",
-                    F.least(
-                        F.col("label"), F.coalesce("min_in", F.col("label"))
-                    ).alias("new_label"),
-                    F.col("label").alias("old"),
-                )
-                .observe(
-                    obs,
-                    F.sum(
-                        F.when(F.col("new_label") < F.col("old"), 1).otherwise(0)
-                    ).alias("c"),
-                )
-            )
-            labels = staged.select(
-                "id", F.col("new_label").alias("label")
-            ).localCheckpoint(eager=True)
-            if int(obs.get["c"] or 0) == 0:
-                break
+        fix = min_label_fixpoint(sym, labels, max_iterations, num_partitions=P)
     sym.unpersist()
-    return labels.select(
+    return fix.labels_or_raise("dedup_clusters").select(
         F.col("id").alias("doc_id"),
         F.col("label").alias("cluster_id"),
         (F.col("id") == F.col("label")).alias("is_survivor"),

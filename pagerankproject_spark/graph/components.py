@@ -6,21 +6,18 @@ No reference implementation exists (the reference computes only
 PageRank); semantics: undirected components, output keyed by url with
 the component labeled by its minimum url (exact-match per north_rule).
 
-Execution shape per iteration (all DataFrame, one scalar action):
-  msgs  = sym_edges JOIN labels ON src -> groupBy dst MIN(label)
-          (min is algebraic: map-side partial aggregation absorbs
-          in-degree skew; with salt_buckets the aggregation is an
-          explicit two-phase (dst, salt) -> dst reduction)
-  new   = labels LEFT JOIN msgs: least(old, min_incoming)
-  changed = SUM(new < old)   -- drives convergence, logged per iteration
+`min_label_fixpoint` is the engine's one min-label round and loop:
+join, MIN grouped by dst, least(old, min_in), with the changed count
+riding the round's localCheckpoint (one Spark job per round), optional
+skew salting and ParquetCheckpointer cadence/resume. Connected
+components runs it over the symmetrized edge table; dedup/clusters.py,
+SCAN's core components (scan.py) and SCC's forward coloring (scc.py)
+call the same function.
 
 Internally labels are dense long ids (cheap shuffles); min-id and
 min-url induce the same partition of the vertex set, so after
 convergence each component is relabeled by its minimum url for the
 exact-match contract.
-
-Lineage is truncated every iteration (localCheckpoint); durable
-checkpoints + resume via ParquetCheckpointer, same protocol as PageRank.
 
 Below the driver-local threshold (graph/local.py `runs_local`: the
 same size and maxResultSize decision as `pagerank(spmv="auto")`) the
@@ -55,6 +52,115 @@ class ComponentsResult:
     iterations: int
     converged: bool
     metrics: list[dict] = field(default_factory=list)
+
+
+@dataclass
+class MinLabelFixpoint:
+    labels: DataFrame  # id, label
+    iterations: int  # rounds run by this call (a resume continues the count)
+    converged: bool
+    max_iterations: int
+    metrics: list[dict] = field(default_factory=list)
+
+    def labels_or_raise(self, op: str) -> DataFrame:
+        """`labels`, or RuntimeError naming `op` and the round cap when
+        the cap ran out before a round changed nothing."""
+        if not self.converged:
+            raise RuntimeError(
+                f"{op}: min-label propagation still changing after "
+                f"max_iterations={self.max_iterations}; raise max_iterations"
+            )
+        return self.labels
+
+
+def min_label_fixpoint(
+    edges: DataFrame,
+    labels: DataFrame,
+    max_iterations: int,
+    num_partitions: int | None = None,
+    salt_buckets: int = 0,
+    checkpointer: ParquetCheckpointer | None = None,
+    checkpoint_interval: int = 5,
+    resume: bool = False,
+) -> MinLabelFixpoint:
+    """Min-label propagation to a fixpoint — the one round behind
+    connected components, near-dup clusters, SCAN's core components and
+    SCC's forward coloring. Each round every id takes least(own label,
+    MIN label over its in-edges src -> dst); ids without in-edges keep
+    theirs. Stops when a round changes nothing (`converged`) or after
+    `max_iterations` rounds.
+
+    `edges` (src, dst): message edges; undirected callers pass both
+    directions. `labels` (id, label): the start, any orderable type;
+    hash-partitioned by id into `num_partitions` when given, then
+    checkpointed. The caller owns the AQE / shuffle-partition context.
+
+    Per round: edges JOIN labels ON src -> GROUP BY dst MIN(label) (min
+    is algebraic: map-side partial aggregation absorbs in-degree skew;
+    with `salt_buckets` > 0 it is an explicit two-phase (dst, salt) ->
+    dst reduction that splits hot destination keys) -> labels LEFT JOIN
+    msgs. The changed count SUM(new < old) rides the round's
+    localCheckpoint as an Observation: one Spark job per round.
+
+    `checkpointer` writes the labels every `checkpoint_interval` rounds
+    and at convergence; with `resume` the loop continues from its latest
+    committed round instead of `labels` (round numbers in `metrics`
+    continue too)."""
+    it, converged = 0, False
+    if checkpointer and resume:
+        info = checkpointer.latest()
+        if info is not None:
+            labels = checkpointer.read(labels.sparkSession, info.iteration)
+            it = info.iteration + 1
+            converged = bool(info.metrics.get("converged", False))
+    start = it
+    if num_partitions is not None:
+        labels = labels.repartition(num_partitions, "id")
+    labels = labels.localCheckpoint(eager=True)
+    salt = ["salt"] if salt_buckets > 0 else []
+    if salt:
+        edges = edges.withColumn(
+            "salt", F.pmod(F.hash("src"), F.lit(salt_buckets))
+        ).persist()
+    metrics: list[dict] = []
+    while it < max_iterations and not converged:
+        t0 = time.time()
+        incoming = edges.join(labels, edges.src == labels.id).select(
+            F.col("dst").alias("id"), *salt, "label"
+        )
+        if salt:
+            incoming = incoming.groupBy("id", "salt").agg(
+                F.min("label").alias("label")
+            )
+        msgs = incoming.groupBy("id").agg(F.min("label").alias("min_in"))
+        obs = Observation()
+        staged = (
+            labels.join(msgs, "id", "left")
+            .select(
+                "id",
+                F.least("label", F.coalesce("min_in", "label")).alias("new_label"),
+                F.col("label").alias("old_label"),
+            )
+            .observe(
+                obs,
+                F.sum(
+                    F.when(F.col("new_label") < F.col("old_label"), 1).otherwise(0)
+                ).alias("c"),
+            )
+        )
+        # changed-count rides the checkpoint materialization: 1 job/round
+        labels = staged.select(
+            "id", F.col("new_label").alias("label")
+        ).localCheckpoint(eager=True)
+        changed = int(obs.get["c"] or 0)  # SUM over no rows is NULL
+        metrics.append({"i": it, "changed": changed, "wall_sec": time.time() - t0})
+        converged = changed == 0
+        if checkpointer and (converged or it % checkpoint_interval == 0):
+            checkpointer.write(labels, it, {"changed": changed, "converged": converged})
+        it += 1
+    if salt:
+        edges.unpersist()
+    return MinLabelFixpoint(labels, it - start, converged, max_iterations, metrics)
 
 
 def connected_components(
@@ -96,12 +202,12 @@ def connected_components(
         return _components_local(spark, g, max_iterations)
     P = g.num_partitions
     # symmetrize once; duplicates are harmless under MIN
-    e = g.weighted_edges.select("src_id", "dst_id")
+    e = g.weighted_edges.select(
+        F.col("src_id").alias("src"), F.col("dst_id").alias("dst")
+    )
     sym = (
-        e.union(
-            e.select(F.col("dst_id").alias("src_id"), F.col("src_id").alias("dst_id"))
-        )
-        .repartition(P, "src_id")
+        e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+        .repartition(P, "src")
         .persist()
     )
     if salt_buckets == "auto":
@@ -112,113 +218,50 @@ def connected_components(
             salt_buckets = 0
         else:
             max_deg = (
-                sym.groupBy("src_id").count().agg(F.max("count")).first()[0]
-                or 0
+                sym.groupBy("src").count().agg(F.max("count")).first()[0] or 0
             )
             threshold = max(1_000_000, 4 * (2 * g.num_edges) // max(P, 1))
             salt_buckets = 8 if max_deg > threshold else 0
-    if salt_buckets > 0:
-        sym = sym.withColumn(
-            "salt", F.pmod(F.hash("src_id"), F.lit(salt_buckets))
-        ).persist()
 
-    labels = g.vertices.select(
-        "id", F.col("id").alias("label")
-    ).repartition(P, "id")
-
-    start_iter, converged = 0, False
+    labels = g.vertices.select("id", F.col("id").alias("label"))
     ckpt = ParquetCheckpointer(checkpoint_dir, job_name) if checkpoint_dir else None
-    resumed = False
-    if ckpt and resume:
-        info = ckpt.latest()
-        if info is not None:
-            labels = ckpt.read(spark, info.iteration).repartition(P, "id")
-            start_iter = info.iteration + 1
-            converged = bool(info.metrics.get("converged", False))
-            resumed = True
-    if init_labels is not None and not resumed:
+    if init_labels is not None and not (resume and ckpt and ckpt.latest()):
         # map the previous output's representative urls to CURRENT dense
         # ids (append_edges keeps old ids stable, but the representative
         # is keyed by url); unseen vertices start at their own id.
-        # checkpointed leaf: init_labels usually shares lineage with this
-        # graph (append_edges keeps the old build in the plan), and
-        # Spark's ambiguous self-join resolution over shared plans can
-        # silently match zero rows (seen in incremental_scc).
+        # checkpointed leaf: init_labels can share lineage with this
+        # graph, and Spark's ambiguous self-join resolution over shared
+        # plans can silently match zero rows (seen in incremental_scc).
         init = init_labels.select("url", "component").localCheckpoint(eager=True)
         rep = g.vertices.select(
             F.col("url").alias("component"), F.col("id").alias("warm")
         )
         warm = init.join(rep, "component").select("url", "warm")
-        labels = (
-            g.vertices.join(warm, "url", "left")
-            .select("id", F.coalesce("warm", F.col("id")).alias("label"))
-            .repartition(P, "id")
+        labels = g.vertices.join(warm, "url", "left").select(
+            "id", F.coalesce("warm", F.col("id")).alias("label")
         )
 
-    labels = labels.localCheckpoint(eager=True)
-    metrics: list[dict] = []
-    it = start_iter
     # size the min-label rounds to the symmetrized edges (no-op at scale)
     with no_aqe(spark), loop_shuffle_partitions(spark, 2 * g.num_edges):
-        while it < max_iterations and not converged:
-            t0 = time.time()
-            if salt_buckets > 0:
-                # explicit two-phase min: (id, salt) partial, then id final —
-                # splits hot destination keys across salt buckets (#23).
-                incoming = sym.join(labels, sym.src_id == labels.id).select(
-                    F.col("dst_id").alias("id"), "salt", "label"
-                )
-                msgs = (
-                    incoming.groupBy("id", "salt")
-                    .agg(F.min("label").alias("m"))
-                    .groupBy("id")
-                    .agg(F.min("m").alias("min_in"))
-                )
-            else:
-                incoming = sym.join(labels, sym.src_id == labels.id).select(
-                    F.col("dst_id").alias("id"), "label"
-                )
-                msgs = incoming.groupBy("id").agg(F.min("label").alias("min_in"))
-            obs = Observation()
-            staged = (
-                labels.join(msgs, "id", "left")
-                .select(
-                    "id",
-                    F.least(
-                        F.col("label"), F.coalesce(F.col("min_in"), F.col("label"))
-                    ).alias("new_label"),
-                    F.col("label").alias("old_label"),
-                )
-                .observe(
-                    obs,
-                    F.sum(
-                        F.when(F.col("new_label") < F.col("old_label"), 1).otherwise(0)
-                    ).alias("c"),
-                )
-            )
-            # changed-count rides the checkpoint materialization: 1 job/iter
-            labels = staged.select(
-                "id", F.col("new_label").alias("label")
-            ).localCheckpoint(eager=True)
-            changed = obs.get["c"]
-            metrics.append(
-                {"i": it, "changed": int(changed), "wall_sec": time.time() - t0}
-            )
-            converged = changed == 0
-            if ckpt and (converged or it % checkpoint_interval == 0):
-                ckpt.write(
-                    labels, it, {"changed": int(changed), "converged": converged}
-                )
-            it += 1
+        fix = min_label_fixpoint(
+            sym,
+            labels,
+            max_iterations,
+            num_partitions=P,
+            salt_buckets=salt_buckets,
+            checkpointer=ckpt,
+            checkpoint_interval=checkpoint_interval,
+            resume=resume,
+        )
 
     # relabel components by their minimum url (exact-match output contract)
-    out = _relabel_min_url(g, labels)
+    out = _relabel_min_url(g, fix.labels)
     sym.unpersist()
     return ComponentsResult(
         components=out,
-        iterations=it - start_iter,
-        converged=converged,
-        metrics=metrics,
+        iterations=fix.iterations,
+        converged=fix.converged,
+        metrics=fix.metrics,
     )
 
 

@@ -128,9 +128,6 @@ def pagerank(
         The mid-scale regime: right whenever the VERTEX state fits one
         machine (n ~ up to tens of millions) while edges don't have
         to. Checkpoint/resume supported.
-      * "csr" — per-partition src-hashed CSR blocks + numpy kernels,
-        cogrouped with distributed ranks (operator #8's fully-
-        distributed physical layout; keeps vertex state sharded);
       * "local" — iterate in-process (numpy scatter-add) over the
         graph's shared driver-local copy (graph/local.py `local_graph`:
         collected once per GraphTables and reused by connected
@@ -187,6 +184,8 @@ def pagerank(
         return _pagerank_local(
             spark, g, v_expr, alpha, epsilon, max_iterations, x0_ranks
         )
+    if spmv not in ("blocks", "dataframe"):
+        raise ValueError(f"unknown spmv impl: {spmv}")
     base, d_cnt = _build_base(g, v_expr)
     if spmv == "blocks":
         return _pagerank_blocks(
@@ -259,15 +258,6 @@ def pagerank(
         ranks = base.select("id", F.lit(x0).alias("x")).localCheckpoint(eager=True)
         dm = d_cnt * x0
 
-    csr_blocks = None
-    if spmv == "csr":
-        from ..ingest.csr import build_csr_blocks
-
-        csr_blocks = build_csr_blocks(g).persist()
-        csr_blocks.count()
-    elif spmv != "dataframe":
-        raise ValueError(f"unknown spmv impl: {spmv}")
-
     # size the per-iteration shuffles to the edge table (pure metadata;
     # a no-op at scale where the session default dominates — partition
     # count only changes task granularity and float summation order at
@@ -276,10 +266,7 @@ def pagerank(
         converged, ranks = _run_loop(
             g, base, ranks, dm, alpha, epsilon, max_iterations,
             start_iter, residuals, metrics, ckpt, checkpoint_interval,
-            spark=spark, csr_blocks=csr_blocks,
         )
-    if csr_blocks is not None:
-        csr_blocks.unpersist()
 
     out = base.select("id", "url").join(ranks, "id")
     return PageRankResult(
@@ -486,7 +473,6 @@ def _pagerank_blocks(
 def _run_loop(
     g: GraphTables, base, ranks, dm, alpha, epsilon, max_iterations,
     start_iter, residuals, metrics, ckpt, checkpoint_interval,
-    spark=None, csr_blocks: DataFrame | None = None,
 ) -> tuple[bool, DataFrame]:
     """Iteration body of `pagerank` (split out so the AQE guard wraps it
     cleanly). Returns (converged, final ranks)."""
@@ -495,16 +481,11 @@ def _run_loop(
     prev_state: DataFrame | None = None
     for i in range(start_iter, max_iterations):
         t0 = time.time()
-        if csr_blocks is not None:
-            from ..ingest.csr import spmv_csr
-
-            contribs = spmv_csr(spark, csr_blocks, ranks, g.num_partitions)
-        else:
-            contribs = (
-                we.join(ranks, we.src_id == ranks.id)
-                .groupBy("dst_id")
-                .agg(F.sum(F.col("weight") * F.col("x")).alias("msg"))
-            )
+        contribs = (
+            we.join(ranks, we.src_id == ranks.id)
+            .groupBy("dst_id")
+            .agg(F.sum(F.col("weight") * F.col("x")).alias("msg"))
+        )
         teleport = alpha * dm + (1.0 - alpha)
         u_full = (
             base.join(ranks.withColumnRenamed("x", "x_prev"), "id")

@@ -29,9 +29,8 @@ eps = eps_num/eps_den,
 
 (valid while (cn+2)*eps_den < 2^31.5 ~ 3e9, far beyond any real
 common-neighbor count; no floats anywhere, so Spark and DuckDB agree
-bit-for-bit). Cluster ids are min-url labels (monotone min
-propagation, same loop shape as dedup/clusters.py with the
-changed-count riding the localCheckpoint Observation). SCAN's
+bit-for-bit). Cluster ids are min-url labels (graph/components.py
+`min_label_fixpoint` over the core-core similar edges). SCAN's
 textbook border attachment is traversal-order-dependent; this engine
 defines it deterministically as the MIN cluster id over adjacent
 cores, and hubs as unclassified vertices whose plain neighbors span
@@ -48,11 +47,12 @@ north-rule family sibling of connected components / label propagation.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..ingest.edges import GraphTables
 from ..session import loop_shuffle_partitions, no_aqe
+from .components import min_label_fixpoint
 from .triangles import triangle_counts
 
 
@@ -70,6 +70,8 @@ def scan_clusters(
     Output: url, role ('core' | 'border' | 'hub' | 'outlier'),
     cluster (min member url of the core component; NULL for
     hub/outlier). Covers every endpoint of the simplified graph.
+    Raises RuntimeError when the core components take more than
+    `max_iterations` min-label rounds to settle.
     """
     if g is None and edges is None:
         raise ValueError("scan_clusters: need g or edges")
@@ -115,45 +117,21 @@ def scan_clusters(
     cc_sym = (
         simadj.join(cores.select(F.col("v")), "v", "left_semi")
         .join(cores.select(F.col("v").alias("w")), "w", "left_semi")
-        .repartition("v")
+        .select(F.col("v").alias("src"), F.col("w").alias("dst"))
+        .repartition("src")
         .persist()
-    )
-    labels = (
-        cores.select("v", F.col("v").alias("label"))
-        .localCheckpoint(eager=True)
     )
     # size the min-label rounds to the core adjacency (no-op at scale)
     m_cc = cc_sym.count()
     with no_aqe(spark), loop_shuffle_partitions(spark, m_cc):
-        for _ in range(max_iterations):
-            msgs = (
-                cc_sym.join(labels, "v")
-                .groupBy(F.col("w").alias("v"))
-                .agg(F.min("label").alias("min_in"))
-            )
-            obs = Observation()
-            staged = (
-                labels.join(msgs, "v", "left")
-                .select(
-                    "v",
-                    F.least(
-                        F.col("label"), F.coalesce("min_in", F.col("label"))
-                    ).alias("new_label"),
-                    F.col("label").alias("old"),
-                )
-                .observe(
-                    obs,
-                    F.sum(
-                        F.when(F.col("new_label") < F.col("old"), 1).otherwise(0)
-                    ).alias("c"),
-                )
-            )
-            labels = staged.select(
-                "v", F.col("new_label").alias("label")
-            ).localCheckpoint(eager=True)
-            if int(obs.get["c"] or 0) == 0:
-                break
-    clusters = labels.select("v", F.col("label").alias("cluster"))
+        fix = min_label_fixpoint(
+            cc_sym,
+            cores.select(F.col("v").alias("id"), F.col("v").alias("label")),
+            max_iterations,
+        )
+    clusters = fix.labels_or_raise("scan_clusters").select(
+        F.col("id").alias("v"), F.col("label").alias("cluster")
+    )
 
     core_rows = clusters.select(
         "v", F.lit("core").alias("role"), "cluster"

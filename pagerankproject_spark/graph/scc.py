@@ -16,8 +16,8 @@ Per round over the remaining subgraph:
      iterate. This alone finishes any DAG portion (most of a web
      graph's vertices) in diameter-many cheap rounds.
   2. FORWARD coloring to fixpoint: color(v) = min id u that reaches v
-     (min-propagation along edge direction, init color(v) = v) — the
-     CC skeleton (components.py) without symmetrization.
+     (graph/components.py `min_label_fixpoint` over the directed edges,
+     init color(v) = v).
   3. BACKWARD marking to fixpoint: pivots are vertices with
      color(v) == v; mark u when an edge u -> v has v marked and
      color(u) == color(v). Marked vertices form complete SCCs: the
@@ -33,9 +33,11 @@ Per round over the remaining subgraph:
 
 All DataFrame joins/aggs; every fixpoint runs one Spark job per
 iteration (Observation-borne changed-count riding a localCheckpoint,
-the pattern shared with pagerank/components/kcore). Labels are dense
-long ids in flight; the output relabels each SCC by its minimum url
-(ids are not url-ordered — ingest/edges.py:76).
+the pattern shared with pagerank/components/kcore), and a coloring or
+marking fixpoint still changing after `max_iterations` rounds raises
+RuntimeError. Labels are dense long ids in flight; the output relabels
+each SCC by its minimum url (components.py `_relabel_min_url`; ids are
+not url-ordered — ingest/edges.py:76).
 
 Scale notes (100 TB): trimming is two semi-joins per iteration on an
 ever-shrinking edge set; coloring/marking shuffle 8-byte ids with
@@ -57,6 +59,7 @@ from pyspark.sql import functions as F
 
 from ..ingest.edges import GraphTables
 from ..session import loop_shuffle_partitions, no_aqe
+from .components import _relabel_min_url, min_label_fixpoint
 
 
 @dataclass
@@ -88,7 +91,7 @@ def strongly_connected_components(
     )
     verts = _ckpt(g.vertices.select("id").repartition(P, "id"))
 
-    assigned: list[DataFrame] = []  # (id, scc) fragments, each checkpointed
+    assigned: list[DataFrame] = []  # (id, label) fragments, each checkpointed
     metrics: list[dict] = []
     rounds = 0
 
@@ -107,7 +110,7 @@ def strongly_connected_components(
                     assigned.append(
                         _ckpt(
                             verts.join(live, "id", "anti").select(
-                                "id", F.col("id").alias("scc")
+                                "id", F.col("id").alias("label")
                             )
                         )
                     )
@@ -126,41 +129,21 @@ def strongly_connected_components(
                 break
 
             # --- 2. forward coloring: color(v) = min id reaching v ---
-            color = _ckpt(
-                verts.select("id", F.col("id").alias("color")).repartition(P, "id")
-            )
-            for _ in range(max_iterations):
-                msgs = (
-                    edges.join(color, edges.src_id == color.id)
-                    .groupBy(F.col("dst_id").alias("id"))
-                    .agg(F.min("color").alias("min_in"))
-                )
-                obs = Observation()
-                staged = (
-                    color.join(msgs, "id", "left")
-                    .select(
-                        "id",
-                        F.least(
-                            F.col("color"),
-                            F.coalesce(F.col("min_in"), F.col("color")),
-                        ).alias("new_color"),
-                        F.col("color").alias("old_color"),
-                    )
-                    .observe(
-                        obs,
-                        F.sum(
-                            F.when(F.col("new_color") < F.col("old_color"), 1).otherwise(0)
-                        ).alias("c"),
-                    )
-                )
-                color = _ckpt(staged.select("id", F.col("new_color").alias("color")))
-                if obs.get["c"] == 0:
-                    break
+            color = min_label_fixpoint(
+                edges.select(
+                    F.col("src_id").alias("src"), F.col("dst_id").alias("dst")
+                ),
+                verts.select("id", F.col("id").alias("label")),
+                max_iterations,
+                num_partitions=P,
+            ).labels_or_raise("strongly_connected_components forward coloring")
 
             # --- 3. backward marking from pivots within color classes ---
             state = _ckpt(
                 color.select(
-                    "id", "color", (F.col("id") == F.col("color")).alias("marked")
+                    "id",
+                    F.col("label").alias("color"),
+                    (F.col("id") == F.col("label")).alias("marked"),
                 ).repartition(P, "id")
             )
             for _ in range(max_iterations):
@@ -202,10 +185,16 @@ def strongly_connected_components(
                 )
                 if obs.get["c"] == 0:
                     break
+            else:
+                raise RuntimeError(
+                    "strongly_connected_components backward marking: still "
+                    f"changing after max_iterations={max_iterations}; raise "
+                    "max_iterations"
+                )
 
             # --- 4. settle marked SCCs, shrink the remaining graph ---
             done = _ckpt(
-                state.filter("marked").select("id", F.col("color").alias("scc"))
+                state.filter("marked").select("id", F.col("color").alias("label"))
             )
             assigned.append(done)
             verts = _ckpt(verts.join(done.select("id"), "id", "anti"))
@@ -222,20 +211,11 @@ def strongly_connected_components(
     labels = assigned[0]
     for frag in assigned[1:]:
         labels = labels.union(frag)
-    return _relabel(g, labels, rounds, metrics)
-
-
-def _relabel(
-    g: GraphTables, labels: DataFrame, rounds: int, metrics: list[dict]
-) -> SCCResult:
-
-    # relabel each SCC by its minimum url (exact-match output contract;
+    # each SCC labeled by its minimum url (exact-match output contract;
     # ids are not url-ordered so min-id != min-url)
-    v = g.vertices
-    lab_urls = labels.join(v, "id").select("url", "scc")
-    rep = lab_urls.groupBy("scc").agg(F.min("url").alias("component"))
-    out = lab_urls.join(rep, "scc").select("url", "component")
-    return SCCResult(components=out, rounds=rounds, metrics=metrics)
+    return SCCResult(
+        components=_relabel_min_url(g, labels), rounds=rounds, metrics=metrics
+    )
 
 
 def incremental_scc(

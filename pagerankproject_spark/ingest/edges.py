@@ -428,7 +428,10 @@ def append_edges(
         delta (join on the touched-src set); every other row of the
         weighted table is reused as-is;
       * result is repartitioned on the same key so iteration joins keep
-        their layout.
+        their layout, and checkpointed: each append's plan references
+        the previous tables several times, so persisted (lineage-
+        keeping) results made chained appends plan in exponential time
+        and heap (3 appends on a 30-vertex graph needed > 4 GB).
 
     Exactly equal to a full rebuild on the concatenated edge list
     (url-keyed; asserted in tests) — PROVIDED `g` was built with the
@@ -457,7 +460,9 @@ def append_edges(
     )
     fresh_df, n_fresh = assign_dense_ids(spark, new_urls, P)
     fresh = fresh_df.select((F.col("id") + F.lit(g.n)).alias("id"), "url")
-    vertices = g.vertices.union(fresh).repartition(P, "id").persist()
+    vertices = g.vertices.union(fresh).repartition(P, "id").localCheckpoint(
+        eager=True
+    )
     n = g.n + n_fresh
 
     ids_src = vertices.select(F.col("url").alias("src"), F.col("id").alias("src_id"))
@@ -480,7 +485,7 @@ def append_edges(
         untouched_rows.select("src_id", "dst_id", "weight")
         .union(touched_rows.select("src_id", "dst_id", "weight"))
         .repartition(P, "src_id")
-        .persist()
+        .localCheckpoint(eager=True)
     )
     num_edges = weighted.count()
     delta.unpersist()

@@ -89,6 +89,13 @@ class _BitReader:
         self.nbits = 0
         self.marker: int | None = None  # pending non-stuffing marker
 
+    def _next_byte(self) -> int:
+        if self.pos >= len(self.data):
+            raise ValueError("corrupt JPEG: truncated entropy-coded data")
+        b = self.data[self.pos]
+        self.pos += 1
+        return b
+
     def _fill(self) -> None:
         if self.marker is not None:
             # past a marker: baseline decoders see 0-bits (T.81 F.2.2.5
@@ -96,15 +103,11 @@ class _BitReader:
             self.bits = (self.bits << 8) & 0xFFFFFFFF
             self.nbits += 8
             return
-        b = self.data[self.pos]
-        self.pos += 1
+        b = self._next_byte()
         if b == 0xFF:
-            nxt = self.data[self.pos]
-            if nxt == 0x00:
-                self.pos += 1
-            else:
+            nxt = self._next_byte()
+            if nxt != 0x00:
                 self.marker = nxt
-                self.pos += 1
                 self.bits = (self.bits << 8) & 0xFFFFFFFF
                 self.nbits += 8
                 return
@@ -141,12 +144,9 @@ class _BitReader:
             self.marker = None
         else:
             while True:
-                b = self.data[self.pos]
-                self.pos += 1
-                if b != 0xFF:
+                if self._next_byte() != 0xFF:
                     continue
-                m = self.data[self.pos]
-                self.pos += 1
+                m = self._next_byte()
                 if m != 0x00:
                     break
         if not (0xD0 <= m <= 0xD7):

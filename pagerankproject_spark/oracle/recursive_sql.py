@@ -496,7 +496,7 @@ from lpa join vid u on lpa.v = u.id join vid l on lpa.lbl = l.id"""
 
 
 # ---------------------------------------------------------------------------
-# Near-dup transitive clustering — dedup/clusters.py:23-86
+# Near-dup transitive clustering — dedup/clusters.py::dedup_clusters
 # ---------------------------------------------------------------------------
 
 

@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import contextlib
+import os
 import sys
 from pathlib import Path
 
@@ -13,9 +14,25 @@ if str(REPO) not in sys.path:
 from pagerankproject_spark.session import get_spark  # noqa: E402
 
 
+def _driver_memory_conf() -> dict[str, str]:
+    """Heap for the in-process test JVM when SPARK_DRIVER_MEMORY is
+    unset: ~3/8 of physical RAM, at most the engine's 16g default. A
+    16g heap lets a full run grow the JVM past a 16 GB box's memory;
+    6g holds there."""
+    if os.environ.get("SPARK_DRIVER_MEMORY"):
+        return {}
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return {"spark.driver.memory": f"{min(16 << 10, ram * 3 // 8 >> 20)}m"}
+
+
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="tests", master="local[4]", shuffle_partitions=4)
+    s = get_spark(
+        app_name="tests",
+        master="local[4]",
+        shuffle_partitions=4,
+        extra_conf=_driver_memory_conf(),
+    )
     yield s
     s.stop()
 

@@ -1,13 +1,12 @@
-"""CSR adjacency-block tests: structure + exact SpMV equivalence with
-the DataFrame join+aggregate path."""
+"""CSR adjacency-block PageRank (`spmv="blocks"`, the dst-partitioned
+on-disk blocks of ingest/csr.py — what the `pagerank_csr` contract key
+runs): converges to the DataFrame path's ranks."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from fixtures.graphs import SMALL_GRAPH_EDGES
-from pagerankproject_spark.ingest.csr import build_csr_blocks, spmv_csr
 from pagerankproject_spark.ingest.edges import build_graph_tables
 from tests.conftest import edges_df
 
@@ -19,82 +18,11 @@ def small_g(spark):
     g.unpersist()
 
 
-def test_csr_blocks_structure(spark, small_g):
-    blocks = build_csr_blocks(small_g).collect()
-    total_edges = sum(len(b["dst_ids"]) for b in blocks)
-    assert total_edges == small_g.num_edges
-    seen_srcs = set()
-    for b in blocks:
-        assert len(b["weights"]) == len(b["dst_ids"])
-        assert len(b["indptr"]) == len(b["src_ids"]) + 1
-        assert b["indptr"][0] == 0
-        assert b["indptr"][-1] == len(b["dst_ids"])
-        assert b["src_ids"] == sorted(b["src_ids"])
-        assert not (set(b["src_ids"]) & seen_srcs), "source split across blocks"
-        seen_srcs |= set(b["src_ids"])
-    # every non-dangling vertex appears in exactly one block
-    n_sources = (
-        small_g.weighted_edges.select("src_id").distinct().count()
-    )
-    assert len(seen_srcs) == n_sources
-
-
-def test_spmv_csr_matches_dataframe_spmv(spark, small_g):
-    ranks = small_g.vertices.select(
-        "id", (F.col("id").cast("double") + 1.0).alias("x")
-    )
-    df_msgs = {
-        r["dst_id"]: r["msg"]
-        for r in small_g.weighted_edges.join(
-            ranks, small_g.weighted_edges.src_id == ranks.id
-        )
-        .groupBy("dst_id")
-        .agg(F.sum(F.col("weight") * F.col("x")).alias("msg"))
-        .collect()
-    }
-    blocks = build_csr_blocks(small_g)
-    csr_msgs = {
-        r["dst_id"]: r["msg"]
-        for r in spmv_csr(spark, blocks, ranks, small_g.num_partitions).collect()
-    }
-    assert set(csr_msgs) == set(df_msgs)
-    for k in df_msgs:
-        assert csr_msgs[k] == pytest.approx(df_msgs[k], abs=1e-12)
-
-
-def test_spmv_csr_random_graph(spark):
-    import random
-
-    rng = random.Random(99)
-    edges = [
-        (f"u{rng.randrange(80)}", f"u{rng.randrange(80)}") for _ in range(600)
-    ]
-    g = build_graph_tables(spark, edges_df(spark, edges))
-    ranks = g.vertices.select("id", (F.hash("url") % 100).cast("double").alias("x"))
-    df_msgs = {
-        r["dst_id"]: r["msg"]
-        for r in g.weighted_edges.join(ranks, g.weighted_edges.src_id == ranks.id)
-        .groupBy("dst_id")
-        .agg(F.sum(F.col("weight") * F.col("x")).alias("msg"))
-        .collect()
-    }
-    csr_msgs = {
-        r["dst_id"]: r["msg"]
-        for r in spmv_csr(
-            spark, build_csr_blocks(g), ranks, g.num_partitions
-        ).collect()
-    }
-    g.unpersist()
-    assert set(csr_msgs) == set(df_msgs)
-    for k in df_msgs:
-        assert csr_msgs[k] == pytest.approx(df_msgs[k], rel=1e-12)
-
-
 def test_pagerank_csr_matches_dataframe(spark, small_g):
     from pagerankproject_spark.graph.pagerank import pagerank
 
     df_res = pagerank(spark, small_g)
-    csr_res = pagerank(spark, small_g, spmv="csr")
+    csr_res = pagerank(spark, small_g, spmv="blocks")
     want = {r["url"]: r["x"] for r in df_res.ranks.collect()}
     got = {r["url"]: r["x"] for r in csr_res.ranks.collect()}
     assert csr_res.converged

@@ -75,6 +75,18 @@ def test_zero_segment_length_raises_promptly():
     assert "bad segment length" in str(caught[0])
 
 
+def test_truncated_entropy_data_raises_value_error():
+    """A valid encode cut off in the middle of its scan: the bit reader
+    runs out of bytes and raises the codec's ValueError, not
+    IndexError."""
+    jp = encode_jpeg_gray(16, 16, _px("t", 256))
+    sos = jp.index(b"\xff\xda")
+    scan = sos + 2 + int.from_bytes(jp[sos + 2 : sos + 4], "big")
+    for cut in (scan + 1, (scan + len(jp)) // 2):
+        with pytest.raises(ValueError, match="truncated entropy-coded data"):
+            decode_jpeg(jp[:cut])
+
+
 def test_color_roundtrips():
     rgb = _px("c", 16 * 16 * 3)
     w, h, c, buf = decode_jpeg(encode_jpeg_rgb(16, 16, rgb, "444"))

@@ -578,6 +578,41 @@ def test_dedup_clusters_end_to_end_with_minhash(spark):
     assert got[4] == 0 and got[1] == 0  # exact dup + near-dup share cluster 0
 
 
+def _union_find_roots(pairs) -> dict[int, int]:
+    """Each endpoint -> the minimum id of its connected component."""
+    parent: dict[int, int] = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+def test_dedup_clusters_chain_longer_than_the_cap_raises(spark):
+    """A near-dup chain settles one link per min-label round: 60 pairs
+    need 61 rounds, so a 50-round cap raises instead of returning the
+    chain split into wrong clusters; the default cap settles it."""
+    from pagerankproject_spark.dedup.clusters import dedup_clusters
+
+    chain = [(i, i + 1) for i in range(60)]
+    pairs = spark.createDataFrame(chain, "a long, b long")
+    with pytest.raises(RuntimeError, match="dedup_clusters.*max_iterations=50"):
+        dedup_clusters(spark, pairs, max_iterations=50)
+    got = {
+        r["doc_id"]: r["cluster_id"]
+        for r in dedup_clusters(spark, pairs).collect()
+    }
+    assert got == _union_find_roots(chain)
+
+
 # ---------------------------------------------------------------------------
 # decontamination + sequence packing (training-data prep additions)
 # ---------------------------------------------------------------------------

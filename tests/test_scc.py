@@ -7,6 +7,7 @@ from __future__ import annotations
 import random
 from collections import defaultdict
 
+import pytest
 from pyspark.sql import functions as F
 
 from fixtures.graphs import make_clustered_random, make_weblike
@@ -316,3 +317,24 @@ def test_condensation_layers_random_digraph(spark):
     for s, t in pairs:
         if s != t and got[s][0] != got[t][0]:
             assert got[t][1] > got[s][1], (s, t)
+
+
+def test_scc_coloring_cap_raises(spark):
+    """A chain of 3-cycles: inside the cycle holding the smallest id,
+    one vertex is two hops from it, so forward coloring changes labels
+    in round 2 and cannot settle in 2 rounds. With max_iterations=2 the
+    call raises instead of returning a non-fixpoint; the default cap
+    matches Tarjan."""
+    pairs = []
+    for i in range(4):
+        a, b, c = f"c{i}a", f"c{i}b", f"c{i}c"
+        pairs += [(a, b), (b, c), (c, a)]
+        if i:
+            pairs.append((f"c{i - 1}c", a))
+    g = _tables(spark, pairs)
+    with pytest.raises(RuntimeError, match="forward coloring.*max_iterations=2"):
+        strongly_connected_components(spark, g, max_iterations=2)
+    res = strongly_connected_components(spark, g)
+    got = {r["url"]: r["component"] for r in res.components.collect()}
+    g.unpersist()
+    assert got == python_scc(pairs)
