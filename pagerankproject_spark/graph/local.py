@@ -3,9 +3,10 @@
 Spark's per-job floor (~0.5-1 s on a laptop-sized cluster) makes a
 distributed round pointless while the whole graph fits comfortably in
 driver memory: one numpy round over a few million edges takes
-milliseconds. This module owns that decision for every loop that has a
-local kernel (`pagerank(spmv="local"/"auto")`, `connected_components`,
-`connected_components_auto`, `label_propagation`):
+milliseconds. This module owns that decision for every operator that
+has a local kernel (`pagerank(spmv="local"/"auto")`,
+`connected_components`, `connected_components_auto`,
+`label_propagation`, `triangle_counts`):
 
   * `runs_local(spark, g)` — the graph is at most LOCAL_SPMV_MAX_EDGES
     edges AND its collect fits spark.driver.maxResultSize (the guard
@@ -13,12 +14,14 @@ local kernel (`pagerank(spmv="local"/"auto")`, `connected_components`,
   * `local_graph(g)` — the dense driver-side copy of a GraphTables
     (edge arrays, url by id, url-order rank), collected once per
     GraphTables, cached on it and dropped by `g.unpersist()`, so
-    PageRank, CC and LPA on one graph share one collect.
+    PageRank, CC, LPA and triangle counting on one graph share one
+    collect.
 
 The kernels themselves live next to their distributed loops (same
 module, same round semantics, same metrics), and run the identical
 synchronous rounds, so `iterations`, per-round `changed` and
-`converged` match the distributed path exactly (tested).
+`converged` match the distributed path exactly (tested); the triangle
+kernel has no rounds and gives the cascade's exact rows and total.
 """
 
 from __future__ import annotations

@@ -20,9 +20,17 @@ O(sum of C(outdeg+, 2)) which orientation bounds by O(m^1.5)):
   4. per-edge counts: explode each triangle into its 3 canonical edges,
      count, right-join back onto the edge list (zero-fill).
 
-Everything is DataFrame joins/aggs — no UDF, no collect. The orientation
-step is exactly what makes hub vertices (web-graph skew) survivable: a
-hub's edges are almost all oriented INTO it, so it never fans out wedges.
+Above the driver-local threshold everything is DataFrame joins/aggs —
+no UDF, no collect. The orientation step is exactly what makes hub
+vertices (web-graph skew) survivable: a hub's edges are almost all
+oriented INTO it, so it never fans out wedges.
+
+Below the threshold (graph/local.py `runs_local`, the decision PageRank,
+CC and LPA share) `triangle_counts(spark, g)` runs the same four steps
+in numpy over the graph's shared driver-local copy (`_triangles_local`):
+no Spark job besides building the result frame, and nothing collected
+that PageRank, CC or LPA on the same graph have not already collected.
+The result says which way it went (`TriangleResult.mode`).
 """
 
 from __future__ import annotations
@@ -30,6 +38,8 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass, field
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -39,12 +49,18 @@ from ..session import (
     no_aqe,
     reset_stats_checkpoint,
 )
+from . import local
+
+# the driver-local kernel enumerates at most max(m, WEDGE_CHUNK_MIN)
+# wedges at once, so its memory stays O(m) on any degree distribution
+WEDGE_CHUNK_MIN = 1 << 22
 
 
 @dataclass
 class TriangleResult:
     per_edge: DataFrame  # a: string, b: string (a<b), triangles: long
     total: int
+    mode: str = "distributed"  # "local": counted on the driver
 
 
 def triangle_counts(
@@ -66,7 +82,13 @@ def triangle_counts(
     translation back to url space happens once, on the per-edge output
     (two joins against the small vertices dim). Any total order is a
     valid orientation, so id-order and url-order tie-breaks give
-    identical counts; the output is re-canonicalized by url."""
+    identical counts; the output is re-canonicalized by url.
+
+    Below the driver-local threshold a materialized GraphTables call is
+    counted on the driver (`_triangles_local`, `mode="local"`); the
+    `edges=` path and `materialize=False` always build the cascade."""
+    if edges is None and materialize and local.runs_local(spark, g):
+        return _triangles_local(spark, g)
     if edges is None:
         und_ids = (
             g.weighted_edges.select("src_id", "dst_id")
@@ -108,6 +130,78 @@ def triangle_counts(
     if materialize:
         und.unpersist()
     return TriangleResult(per_edge=per_edge, total=total)
+
+
+def _triangles_local(spark: SparkSession, g: GraphTables) -> TriangleResult:
+    """The wedge enumeration in numpy over `local.local_graph(g)`.
+
+    Simplify (self-loops dropped, (min id, max id) deduped), orient each
+    edge from the endpoint with the smaller (degree, id) to the larger,
+    and sort the oriented edges by (u, v) in that order. Each edge pairs
+    with every later edge of its u-block — one wedge (u, v1, v2) per
+    pair, each triangle reached once from its lowest vertex — and the
+    wedge closes when (v1, v2) is itself an oriented edge, found by
+    binary search in the sorted keys. Wedges are enumerated in chunks
+    of consecutive sorted edges holding at most max(m, WEDGE_CHUNK_MIN)
+    wedges (one edge opens fewer than m). Every hit adds one to each of
+    its three edges."""
+    lg = local.local_graph(g)
+    n = g.n
+    loop = lg.src == lg.dst
+    lo = np.minimum(lg.src, lg.dst)[~loop]
+    hi = np.maximum(lg.src, lg.dst)[~loop]
+    und = np.unique(lo * n + hi)
+    a, b = und // n, und % n
+    m = len(und)
+    deg = np.bincount(a, minlength=n) + np.bincount(b, minlength=n)
+    # position of each id in the (degree, id) order
+    order = np.empty(n, dtype=np.int64)
+    order[np.lexsort((np.arange(n), deg))] = np.arange(n, dtype=np.int64)
+    ra, rb = order[a], order[b]
+    ru, rv = np.minimum(ra, rb), np.maximum(ra, rb)
+    okey = ru * n + rv
+    by_key = np.argsort(okey)
+    okey, ru, rv = okey[by_key], ru[by_key], rv[by_key]
+    block_end = np.cumsum(np.bincount(ru, minlength=n))
+    later = block_end[ru] - np.arange(m) - 1  # wedges each edge opens
+    counts = np.zeros(m, dtype=np.int64)
+    total = 0
+    for first, last in _wedge_chunks(later, max(m, WEDGE_CHUNK_MIN)):
+        k = later[first:last]
+        p1 = np.repeat(np.arange(first, last), k)
+        p2 = p1 + 1 + np.arange(len(p1)) - np.repeat(np.cumsum(k) - k, k)
+        want = rv[p1] * n + rv[p2]
+        at = np.minimum(np.searchsorted(okey, want), m - 1)
+        hit = okey[at] == want
+        counts += np.bincount(
+            np.concatenate((p1[hit], p2[hit], at[hit])), minlength=m
+        )
+        total += int(np.count_nonzero(hit))
+    # back to the canonical (a < b) edges, then to urls in url order
+    ea, eb = a[by_key], b[by_key]
+    swap = lg.rank[ea] > lg.rank[eb]
+    url = pa.array(lg.url, type=pa.string())
+    table = pa.table(
+        {
+            "a": url.take(np.where(swap, eb, ea)),
+            "b": url.take(np.where(swap, ea, eb)),
+            "triangles": counts,
+        }
+    )
+    per_edge = spark.createDataFrame(table, "a string, b string, triangles long")
+    return TriangleResult(per_edge=per_edge, total=total, mode="local")
+
+
+def _wedge_chunks(later: np.ndarray, bound: int):
+    """(first, last) runs of consecutive edges that together open at
+    most `bound` wedges — or one edge, when it alone opens more."""
+    done = np.cumsum(later)
+    first = 0
+    while first < len(later):
+        before = done[first - 1] if first else 0
+        last = max(first + 1, int(np.searchsorted(done, before + bound, "right")))
+        yield first, last
+        first = last
 
 
 def clustering_coefficients(

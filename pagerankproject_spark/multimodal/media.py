@@ -313,7 +313,8 @@ def extract_image_features(
     is deterministic and usable as an embedding column for the
     similarity/dedup family. Learned (vision-model) embeddings remain
     out of scope in this container; fake=True keeps the md5-chain
-    stand-in for undecodable payloads and plumbing tests."""
+    stand-in for undecodable payloads (also a PNG/BMP/JPEG the native
+    decoders do not cover, e.g. progressive JPEG) and plumbing tests."""
     schema = T.StructType(
         [
             T.StructField("url", T.StringType()),
@@ -357,9 +358,15 @@ def extract_image_features(
                     or payload[:2] == b"BM"
                     or payload[:3] == b"\xff\xd8\xff"
                 ):
-                    w, h, c, buf = _raw_any(u, payload, fake=False)
-                    native_rows.append((u, _classical(w, h, c, buf)))
-                    continue
+                    try:
+                        w, h, c, buf = _raw_any(u, payload, fake=False)
+                    except NotImplementedError:
+                        # e.g. progressive JPEG: the stand-in, if allowed
+                        if not fake:
+                            raise
+                    else:
+                        native_rows.append((u, _classical(w, h, c, buf)))
+                        continue
                 if not fake:
                     raise NotImplementedError(
                         "learned image embeddings need a vision model "

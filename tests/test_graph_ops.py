@@ -129,12 +129,68 @@ def _post_regex(pairs):
     return [(s, t) for s, t in pairs if not rx.match(s) and not rx.match(t)]
 
 
+def _triangles_on_both_paths(spark, g):
+    """triangle_counts(spark, g) on the driver and forced onto the
+    wedge-join cascade: identical rows and total, each path tagged.
+    Returns the local result."""
+    loc = triangle_counts(spark, g)
+    with forced_distributed():
+        dist = triangle_counts(spark, g)
+    assert (loc.mode, dist.mode) == ("local", "distributed")
+    assert sorted(loc.per_edge.collect()) == sorted(dist.per_edge.collect())
+    assert loc.total == dist.total
+    return loc
+
+
 def test_triangles_chain(spark):
     g = _tables(spark, TRIANGLE_CHAIN_EDGES)
-    res = triangle_counts(spark, g)
+    res = _triangles_on_both_paths(spark, g)
     got = {(r["a"], r["b"]): r["triangles"] for r in res.per_edge.collect()}
     assert got == TRIANGLE_CHAIN_PER_EDGE
     assert res.total == TRIANGLE_CHAIN_TOTAL
+
+
+def test_triangles_graphtables_weblike_matches_oracle(spark):
+    # web-like graph through build_graph_tables (drop-regex, duplicate
+    # links, reciprocal pairs, hubs): both paths equal the oracle on
+    # the post-regex pairs
+    pairs = make_weblike(seed=9, n_nodes=100, m_edges=800)
+    pairs += [(t, s) for s, t in pairs[::7]] + [pairs[0], (pairs[1][0],) * 2]
+    g = _tables(spark, pairs)
+    res = _triangles_on_both_paths(spark, g)
+    got = {(r["a"], r["b"]): r["triangles"] for r in res.per_edge.collect()}
+    per_edge, total = oracle.triangle_counts(_post_regex(pairs))
+    assert got == per_edge
+    assert res.total == total
+    g.unpersist()
+
+
+def test_triangles_local_wedge_chunks_stitch(spark, monkeypatch):
+    # a wedge-chunk bound of 3 splits the enumeration into many chunks
+    # (K12 alone opens 220 wedges); the counts must not change
+    from pagerankproject_spark.graph import triangles
+
+    clique = [(f"k{i:02d}", f"k{j:02d}") for i in range(12) for j in range(i)]
+    pairs = clique + make_weblike(seed=9, n_nodes=60, m_edges=300)
+    g = _tables(spark, pairs)
+    whole = triangle_counts(spark, g)
+    chunks = []
+    real = triangles._wedge_chunks
+
+    def small_chunks(later, bound):
+        for first, last in real(later, 3):
+            assert last == first + 1 or later[first:last].sum() <= 3
+            chunks.append((first, last))
+            yield first, last
+
+    monkeypatch.setattr(triangles, "_wedge_chunks", small_chunks)
+    chunked = triangle_counts(spark, g)
+    assert chunked.mode == "local" and len(chunks) > 50
+    assert [c[0] for c in chunks[1:]] == [c[1] for c in chunks[:-1]]
+    assert sorted(chunked.per_edge.collect()) == sorted(whole.per_edge.collect())
+    assert chunked.total == whole.total
+    assert whole.total == oracle.triangle_counts(_post_regex(pairs))[1]
+    g.unpersist()
 
 
 def test_triangles_weblike_matches_oracle(spark):
@@ -147,7 +203,7 @@ def test_triangles_weblike_matches_oracle(spark):
     assert res.total == total
 
 
-def test_triangles_packed_key_matches_string_path(spark):
+def test_triangles_packed_key_matches_string_path(spark, distributed):
     # the GraphTables path packs the (v1, v2) wedge join key into one
     # long (v1<<32 | v2) when g.n < 2^31; the string-keyed path never
     # packs. Same graph through both must agree edge-for-edge — this
@@ -157,6 +213,7 @@ def test_triangles_packed_key_matches_string_path(spark):
     g = _tables(spark, pairs)
     assert g.n < 2**31  # packed path engaged
     packed = triangle_counts(spark, g)
+    assert packed.mode == "distributed"
     got_packed = {
         (r["a"], r["b"]): r["triangles"] for r in packed.per_edge.collect()
     }

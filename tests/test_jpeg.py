@@ -265,6 +265,29 @@ def test_classical_image_features_real_codecs(spark):
         extract_image_features(bad).collect()
 
 
+def test_fake_image_features_fall_back_on_progressive_jpeg(spark):
+    """fake=True gives a progressive JPEG (SOF0 flipped to SOF2) the
+    md5 stand-in vector instead of failing the batch; fake=False still
+    raises the decoder's NotImplementedError."""
+    from pagerankproject_spark.multimodal.media import extract_image_features
+
+    jp = encode_jpeg_gray(16, 16, _px("prog", 256))
+    prog = jp.replace(b"\xff\xc0", b"\xff\xc2", 1)
+    df = spark.createDataFrame(
+        [("img://prog", prog), ("img://base", jp)], "url string, media binary"
+    )
+    got = {
+        r["url"]: r["features"]
+        for r in extract_image_features(df, dim=8, fake=True).collect()
+    }
+    d = hashlib.md5(prog).digest()
+    assert got["img://prog"] == [(d[i % 16] - 128) / 128.0 for i in range(8)]
+    base = extract_image_features(df.filter("url = 'img://base'"), dim=8)
+    assert got["img://base"] == base.collect()[0]["features"]
+    with pytest.raises(Exception, match="progressive"):
+        extract_image_features(df, dim=8).collect()
+
+
 from hypothesis import given, settings, strategies as st
 
 

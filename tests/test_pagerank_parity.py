@@ -175,13 +175,15 @@ def test_blocks_spmv_checkpoint_resume(spark, tmp_path):
 def test_local_spmv_guarded_against_max_result_size(spark, monkeypatch):
     """Explicit spmv='local' beyond the maxResultSize budget fails fast
     with a clear message (no opaque Py4J collect error); spmv='auto',
-    connected components and label propagation silently take the
-    distributed path instead (one shared guard, graph/local.py)."""
+    connected components, label propagation and triangle counting
+    silently take the distributed path instead (one shared guard,
+    graph/local.py)."""
     import pagerankproject_spark.graph.pagerank as pr_mod
     from fixtures.graphs import SMALL_GRAPH_EDGES
     from pagerankproject_spark.graph import local
     from pagerankproject_spark.graph.components import connected_components
     from pagerankproject_spark.graph.labelprop import label_propagation
+    from pagerankproject_spark.graph.triangles import triangle_counts
     from pagerankproject_spark.ingest.edges import build_graph_tables
 
     from .conftest import edges_df
@@ -199,6 +201,7 @@ def test_local_spmv_guarded_against_max_result_size(spark, monkeypatch):
     lpa = label_propagation(spark, g, max_iterations=2)
     for r in (cc, lpa):
         assert "local" not in {m.get("mode") for m in r.metrics}
+    assert triangle_counts(spark, g).mode == "distributed"
     assert g._local is None  # nothing was collected
     g.unpersist()
 

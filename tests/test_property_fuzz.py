@@ -98,6 +98,43 @@ def test_fuzz_triangles(spark, pairs):
     assert res.total == total
 
 
+# urls with an inner or trailing slash are dropped by build_graph_tables'
+# reference regex, so the GraphTables graph is a subgraph of the pairs
+URLS = ["a.x", "b.x", "c.x", "d.x", "e.x", "f.x", "a.x/p", "a.x/p/", "b.x/q/r"]
+
+
+@FUZZ
+@given(
+    pairs=st.lists(
+        st.tuples(st.sampled_from(URLS), st.sampled_from(URLS)),
+        min_size=1,
+        max_size=40,
+    ).map(lambda p: p + [(t, s) for s, t in p[::3]])
+)
+def test_fuzz_triangles_graphtables(spark, pairs):
+    import re
+
+    from pagerankproject_spark.graph.triangles import triangle_counts
+    from pagerankproject_spark.ingest.edges import URL_DROP_RLIKE
+
+    from .conftest import forced_distributed
+
+    drop = re.compile(URL_DROP_RLIKE)
+    post = [(s, t) for s, t in pairs if not (drop.search(s) or drop.search(t))]
+    assume(post)  # at least one edge survives the regex
+    per_edge, total = oracle.triangle_counts(post)
+    g = _tables(spark, pairs)
+    try:
+        loc = triangle_counts(spark, g)
+        with forced_distributed():
+            dist = triangle_counts(spark, g)
+        for mode, res in (("local", loc), ("distributed", dist)):
+            got = {(r["a"], r["b"]): r["triangles"] for r in res.per_edge.collect()}
+            assert (res.mode, got, res.total) == (mode, per_edge, total)
+    finally:
+        g.unpersist()
+
+
 @FUZZ
 @given(pairs=edges_strategy)
 def test_fuzz_coreness(spark, pairs):
