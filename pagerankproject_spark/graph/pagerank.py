@@ -141,7 +141,8 @@ def pagerank(
         entries carry "mode": "local".
       * "auto" — "local" when graph/local.py `runs_local` says the
         graph fits (num_edges <= LOCAL_SPMV_MAX_EDGES and the collect
-        fits maxResultSize — the same decision CC and LPA take), else
+        fits maxResultSize — the same decision CC and LPA take) and
+        the call neither checkpoints nor resumes, else
         "blocks" when the vertex state fits the driver budget, else
         "dataframe".
     Same numbers in every mode (tested)."""
@@ -156,7 +157,9 @@ def pagerank(
     # collects the n-row base once: budget n*40 B against maxResultSize
     blocks_fits = limit == 0 or 40 * g.n <= limit
     if spmv == "auto":
-        if local.runs_local(spark, g):
+        # the local loop keeps no checkpoints, so a checkpointed or
+        # resumed call never picks it
+        if not (checkpoint_dir or resume) and local.runs_local(spark, g):
             spmv = "local"
         elif blocks_fits:
             spmv = "blocks"
@@ -479,6 +482,8 @@ def _run_loop(
     converged = False
     we = g.weighted_edges
     prev_state: DataFrame | None = None
+    # residual reference scale: the previous norm (see the residual below)
+    ref = 1.0
     for i in range(start_iter, max_iterations):
         t0 = time.time()
         contribs = (
@@ -500,14 +505,21 @@ def _run_loop(
                 ).alias("u"),
             )
         )
-        # the four scalar reductions ride along with the checkpoint
+        # the scalar reductions ride along with the checkpoint
         # materialization (Observation = CollectMetrics node) — ONE Spark
-        # job per iteration instead of checkpoint + separate aggregate
+        # job per iteration instead of checkpoint + separate aggregate.
+        # ||u/norm - x_prev|| is taken from d = u - ref * x_prev with ref
+        # the previous norm: (S_dd + 2k S_dp + k^2 S_pp) / norm^2 with
+        # k = ref - norm is exact for any ref, and near the fixpoint every
+        # term is small, where expanding 1 - 2 S_ux / norm + S_pp cancels
+        # down to a ~1.5e-8 (sqrt of double eps) noise floor.
+        d = F.col("u") - F.lit(ref) * F.col("x_prev")
         obs = Observation()
         u_full = u_full.observe(
             obs,
             F.sum(F.col("u") * F.col("u")).alias("s_uu"),
-            F.sum(F.col("u") * F.col("x_prev")).alias("s_ux"),
+            F.sum(d * d).alias("s_dd"),
+            F.sum(d * F.col("x_prev")).alias("s_dp"),
             F.sum(F.col("x_prev") * F.col("x_prev")).alias("s_pp"),
             F.sum(F.when(F.col("is_dangling"), F.col("u")).otherwise(0.0)).alias(
                 "s_du"
@@ -517,9 +529,12 @@ def _run_loop(
         u_df = u_full.select("id", "u").localCheckpoint(eager=True)
         s = obs.get
         norm = math.sqrt(s["s_uu"])
-        residual = math.sqrt(
-            max(0.0, 1.0 - 2.0 * s["s_ux"] / norm + s["s_pp"])
+        k = ref - norm
+        residual = (
+            math.sqrt(max(0.0, s["s_dd"] + 2.0 * k * s["s_dp"] + k * k * s["s_pp"]))
+            / norm
         )
+        ref = norm
         dm = s["s_du"] / norm
         residuals.append(residual)
 

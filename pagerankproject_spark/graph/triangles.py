@@ -30,7 +30,10 @@ CC and LPA share) `triangle_counts(spark, g)` runs the same four steps
 in numpy over the graph's shared driver-local copy (`_triangles_local`):
 no Spark job besides building the result frame, and nothing collected
 that PageRank, CC or LPA on the same graph have not already collected.
-The result says which way it went (`TriangleResult.mode`).
+A graph whose oriented wedge count (sum of C(d+, 2)) exceeds
+LOCAL_WEDGE_BUDGET still takes the cascade, whose joins use every core.
+The result says which way it went (`TriangleResult.mode`) and the wedge
+count that decided it (`TriangleResult.wedges`).
 """
 
 from __future__ import annotations
@@ -54,6 +57,11 @@ from . import local
 # the driver-local kernel enumerates at most max(m, WEDGE_CHUNK_MIN)
 # wedges at once, so its memory stays O(m) on any degree distribution
 WEDGE_CHUNK_MIN = 1 << 22
+# above this many wedges the driver-local kernel hands over to the
+# cascade: it enumerates 7-10M wedges/s on one core (measured, BENCH.md),
+# so the budget caps its wall at ~30 s
+WEDGES_PER_S = 7_000_000
+LOCAL_WEDGE_BUDGET = 30 * WEDGES_PER_S
 
 
 @dataclass
@@ -61,6 +69,10 @@ class TriangleResult:
     per_edge: DataFrame  # a: string, b: string (a<b), triangles: long
     total: int
     mode: str = "distributed"  # "local": counted on the driver
+    # sum of C(d+, 2) over the oriented out-degrees: the wedges the
+    # local kernel enumerates, compared with LOCAL_WEDGE_BUDGET (None
+    # when the graph is above the local threshold or not a GraphTables)
+    wedges: int | None = None
 
 
 def triangle_counts(
@@ -85,10 +97,15 @@ def triangle_counts(
     identical counts; the output is re-canonicalized by url.
 
     Below the driver-local threshold a materialized GraphTables call is
-    counted on the driver (`_triangles_local`, `mode="local"`); the
-    `edges=` path and `materialize=False` always build the cascade."""
+    counted on the driver (`_triangles_local`, `mode="local"`) unless
+    its wedge count exceeds LOCAL_WEDGE_BUDGET; the `edges=` path and
+    `materialize=False` always build the cascade."""
+    wedges = None
     if edges is None and materialize and local.runs_local(spark, g):
-        return _triangles_local(spark, g)
+        oriented = _orient(local.local_graph(g), g.n)
+        wedges = int(oriented[-1].sum())
+        if wedges <= LOCAL_WEDGE_BUDGET:
+            return _triangles_local(spark, g, oriented, wedges)
     if edges is None:
         und_ids = (
             g.weighted_edges.select("src_id", "dst_id")
@@ -116,7 +133,7 @@ def triangle_counts(
                 "triangles",
             )
         )
-        return TriangleResult(per_edge=per_edge, total=total)
+        return TriangleResult(per_edge=per_edge, total=total, wedges=wedges)
 
     und = (
         edges.filter(F.col("src") != F.col("dst"))
@@ -132,21 +149,13 @@ def triangle_counts(
     return TriangleResult(per_edge=per_edge, total=total)
 
 
-def _triangles_local(spark: SparkSession, g: GraphTables) -> TriangleResult:
-    """The wedge enumeration in numpy over `local.local_graph(g)`.
-
-    Simplify (self-loops dropped, (min id, max id) deduped), orient each
-    edge from the endpoint with the smaller (degree, id) to the larger,
-    and sort the oriented edges by (u, v) in that order. Each edge pairs
-    with every later edge of its u-block — one wedge (u, v1, v2) per
-    pair, each triangle reached once from its lowest vertex — and the
-    wedge closes when (v1, v2) is itself an oriented edge, found by
-    binary search in the sorted keys. Wedges are enumerated in chunks
-    of consecutive sorted edges holding at most max(m, WEDGE_CHUNK_MIN)
-    wedges (one edge opens fewer than m). Every hit adds one to each of
-    its three edges."""
-    lg = local.local_graph(g)
-    n = g.n
+def _orient(lg: local.LocalGraph, n: int) -> tuple[np.ndarray, ...]:
+    """Simplify (self-loops dropped, (min id, max id) deduped), orient
+    each edge from the endpoint with the smaller (degree, id) to the
+    larger, and sort the oriented edges by (u, v) in that order.
+    Returns the canonical endpoints (a, b), the sort order, the sorted
+    oriented keys u*n+v and v's, and the wedges each sorted edge opens
+    (the later edges of its u-block; they sum to sum of C(d+, 2))."""
     loop = lg.src == lg.dst
     lo = np.minimum(lg.src, lg.dst)[~loop]
     hi = np.maximum(lg.src, lg.dst)[~loop]
@@ -163,7 +172,25 @@ def _triangles_local(spark: SparkSession, g: GraphTables) -> TriangleResult:
     by_key = np.argsort(okey)
     okey, ru, rv = okey[by_key], ru[by_key], rv[by_key]
     block_end = np.cumsum(np.bincount(ru, minlength=n))
-    later = block_end[ru] - np.arange(m) - 1  # wedges each edge opens
+    later = block_end[ru] - np.arange(m) - 1
+    return a, b, by_key, okey, rv, later
+
+
+def _triangles_local(
+    spark: SparkSession, g: GraphTables, oriented: tuple, wedges: int
+) -> TriangleResult:
+    """The wedge enumeration in numpy over `local.local_graph(g)`,
+    oriented by `_orient`. Each edge pairs with every later edge of its
+    u-block — one wedge (u, v1, v2) per pair, each triangle reached once
+    from its lowest vertex — and the wedge closes when (v1, v2) is
+    itself an oriented edge, found by binary search in the sorted keys.
+    Wedges are enumerated in chunks of consecutive sorted edges holding
+    at most max(m, WEDGE_CHUNK_MIN) wedges (one edge opens fewer than
+    m). Every hit adds one to each of its three edges."""
+    lg = local.local_graph(g)
+    n = g.n
+    a, b, by_key, okey, rv, later = oriented
+    m = len(okey)
     counts = np.zeros(m, dtype=np.int64)
     total = 0
     for first, last in _wedge_chunks(later, max(m, WEDGE_CHUNK_MIN)):
@@ -189,7 +216,9 @@ def _triangles_local(spark: SparkSession, g: GraphTables) -> TriangleResult:
         }
     )
     per_edge = spark.createDataFrame(table, "a string, b string, triangles long")
-    return TriangleResult(per_edge=per_edge, total=total, mode="local")
+    return TriangleResult(
+        per_edge=per_edge, total=total, mode="local", wedges=wedges
+    )
 
 
 def _wedge_chunks(later: np.ndarray, bound: int):

@@ -11,12 +11,24 @@ Reference anchors (/root/reference/pagerank.py):
   #8 sparse matrix build      pagerank.py:72-76   (the weighted_edges DF *is* P)
   #23 salted hash-partitioned edge table (north_rule; no reference impl)
 
-Scale posture: every step is a declarative DataFrame op (Catalyst pushes
-filters into the scan and prunes columns). Dense-id assignment avoids a
-global sort: hash-repartition the distinct vertex set, number rows within
-each partition, then add per-partition offsets (one tiny driver collect of
-P counts). The per-iteration join key (src_id) is the table's partitioning
-key, persisted once and reused by every iterative algorithm.
+Scale posture: above the driver-local threshold every step is a
+declarative DataFrame op (Catalyst pushes filters into the scan and
+prunes columns). Dense-id assignment avoids a global sort:
+hash-repartition the distinct vertex set, number rows within each
+partition, then add per-partition offsets (one tiny driver collect of
+P counts). The per-iteration join key (src_id) is the table's
+partitioning key, persisted once and reused by every iterative
+algorithm.
+
+Below the threshold (graph/local.py `builds_local`: the filtered pair
+count is at most LOCAL_SPMV_MAX_EDGES and their collect fits
+spark.driver.maxResultSize) `build_graph_tables` collects the filtered
+pairs once as Arrow and does operators #4-#7 on the driver
+(`_build_on_driver`): ids are url-order ranks, degrees and weights come
+from `np.bincount`, the tables go back to Spark through
+graph/local.py `hand_back`, and the graph's driver-local copy is seeded
+at build, so the local kernels collect nothing. Salting and the other
+builders stay DataFrame-only.
 """
 
 from __future__ import annotations
@@ -24,6 +36,9 @@ from __future__ import annotations
 import math
 from dataclasses import dataclass, field
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -53,6 +68,12 @@ def tuned_partitions(num_edges: int, parallelism: int) -> int:
 # an unanchored search for the inner group, so Spark's (unanchored) rlike of
 # the inner group reproduces it exactly.
 URL_DROP_RLIKE = r"((/$)|(/.*/))"
+
+_EMPTY_GRAPH = (
+    "empty graph: no edges survived the filters (the reference would "
+    "build a 0x0 matrix and crash later in power_method; failing fast "
+    "here instead)"
+)
 
 
 def limit_rows(edges: DataFrame, max_nnz: int | None) -> DataFrame:
@@ -123,8 +144,9 @@ class GraphTables:
     # when set (the ratio threshold is frozen at build-time n; salt adds
     # a column the delta path doesn't reproduce).
     build_filters: dict | None = None
-    # driver-local copy (graph/local.py LocalGraph), collected on first
-    # use by a local-path loop; not an init field, so a copy made with
+    # driver-local copy (graph/local.py LocalGraph): seeded by a
+    # driver-local build, else collected on first use by a local-path
+    # kernel; not an init field, so a copy made with
     # dataclasses.replace never inherits another graph's arrays
     _local: object = field(default=None, init=False, repr=False, compare=False)
 
@@ -174,18 +196,38 @@ def build_graph_tables(
     buckets, for explicit two-phase aggregation by (dst_id, salt) then
     dst_id. At local test scale the default leaves salting off; the
     iterative algorithms accept the column when present.
+
+    Without salting, filtered pairs within graph/local.py `builds_local`
+    are built on the driver (`_build_on_driver`) into the same tables.
     """
+    from ..graph import local
+
     e = limit_rows(edges, max_nnz)
     e = regex_filter(e)
     # duplicates are real links in the reference (counted in degrees and P);
     # never dedup here.
     e = e.persist()
+    build_filters = {
+        k: v
+        for k, v in (
+            ("max_nnz", max_nnz),
+            ("filter_ratio", filter_ratio),
+            ("salt_buckets", salt_buckets or None),
+        )
+        if v is not None
+    } or None
+    # one cheap count on the just-persisted filter output: it sizes the
+    # partitions and decides where the rest of the build runs
+    rows = e.count()
     if num_partitions is None:
-        # autotune from the measured edge count (one cheap count on the
-        # just-persisted filter output) instead of blindly inheriting
-        # spark.sql.shuffle.partitions — see tuned_partitions.
+        # autotune from the measured edge count instead of blindly
+        # inheriting spark.sql.shuffle.partitions — see tuned_partitions.
         num_partitions = tuned_partitions(
-            e.count(), spark.sparkContext.defaultParallelism
+            rows, spark.sparkContext.defaultParallelism
+        )
+    if not salt_buckets and local.builds_local(spark, rows):
+        return _build_on_driver(
+            spark, e, filter_ratio, num_partitions, build_filters
         )
 
     # vertex set = every endpoint surviving the regex filter
@@ -195,11 +237,7 @@ def build_graph_tables(
     vertices, n = assign_dense_ids(spark, urls, num_partitions)
     vertices = vertices.persist()
     if n == 0:
-        raise ValueError(
-            "empty graph: no edges survived the filters (the reference "
-            "would build a 0x0 matrix and crash later in power_method; "
-            "failing fast here instead)"
-        )
+        raise ValueError(_EMPTY_GRAPH)
 
     ids_src = vertices.select(
         F.col("url").alias("src"), F.col("id").alias("src_id")
@@ -248,24 +286,70 @@ def build_graph_tables(
     weighted = weighted.repartition(num_partitions, "src_id").persist()
     num_edges = weighted.count()
     e.unpersist()
-
-    build_filters = {
-        k: v
-        for k, v in (
-            ("max_nnz", max_nnz),
-            ("filter_ratio", filter_ratio),
-            ("salt_buckets", salt_buckets or None),
-        )
-        if v is not None
-    }
     return GraphTables(
         vertices=vertices,
         weighted_edges=weighted,
         n=n,
         num_partitions=num_partitions,
         num_edges=num_edges,
-        build_filters=build_filters or None,
+        build_filters=build_filters,
     )
+
+
+def _build_on_driver(
+    spark: SparkSession,
+    e: DataFrame,
+    filter_ratio: float | None,
+    num_partitions: int,
+    build_filters: dict | None,
+) -> GraphTables:
+    """Operators #4-#7 over one Arrow collect of the persisted filtered
+    pairs `e` (which this releases), with the Spark path's semantics.
+
+    Ids are url-order ranks: Arrow sorts strings by bytes, Spark's
+    string order, so `rank` is the identity. The in-link-ratio filter
+    keeps indeg[dst] < ratio * n with n frozen before it, and weights
+    are 1/outdeg after it. Both tables go back through graph/local.py
+    `hand_back`; the edge table is then hash-partitioned on src_id,
+    persisted and materialized like the Spark path's."""
+    from ..graph import local
+
+    pairs = e.select("src", "dst").toArrow()
+    e.unpersist()
+    src, dst = pairs.column("src"), pairs.column("dst")
+    urls = pc.unique(pa.chunked_array(src.chunks + dst.chunks, type=src.type))
+    urls = urls.take(pc.sort_indices(urls))
+    n = len(urls)
+    if n == 0:
+        raise ValueError(_EMPTY_GRAPH)
+    s = pc.index_in(src, value_set=urls).to_numpy().astype(np.int64)
+    d = pc.index_in(dst, value_set=urls).to_numpy().astype(np.int64)
+    if filter_ratio is not None:
+        keep = np.bincount(d, minlength=n)[d] < filter_ratio * n
+        s, d = s[keep], d[keep]
+    w = 1.0 / np.bincount(s, minlength=n)[s]
+
+    ids = np.arange(n, dtype=np.int64)
+    vertices = local.hand_back(spark, pa.table({"id": ids, "url": urls}))
+    weighted = local.hand_back(
+        spark, pa.table({"src_id": s, "dst_id": d, "weight": w})
+    )
+    # materialized like the Spark path's table, so the first consumer
+    # pays no repartition and plans over it see the cached stages
+    weighted = weighted.repartition(num_partitions, "src_id").persist()
+    weighted.count()
+    g = GraphTables(
+        vertices=vertices,
+        weighted_edges=weighted,
+        n=n,
+        num_partitions=num_partitions,
+        num_edges=len(s),
+        build_filters=build_filters,
+    )
+    g._local = local.LocalGraph(
+        src=s, dst=d, weight=w, url=urls.to_numpy(zero_copy_only=False), rank=ids
+    )
+    return g
 
 
 def build_weighted_graph_tables(

@@ -81,19 +81,3 @@ def sql_embedding_centroids_long(
     from {table}, unnest(range(len(embedding))) as t(i)
     group by 1, 2
     """
-
-
-def sql_embedding_centroids(
-    group_col: str = "label", table: str = "embeddings"
-) -> str:
-    return f"""
-    with dims as (
-        select {group_col}, i as pos,
-               avg(embedding[i + 1]::double) as m, count(*)::bigint as c
-        from {table}, unnest(range(len(embedding))) as t(i)
-        group by 1, 2
-    )
-    select {group_col}, max(c) as n_vectors,
-           array_agg(round(m, 6) order by pos) as centroid
-    from dims group by 1
-    """

@@ -46,6 +46,21 @@ def test_pagerank_resume_identical(spark, tmp_path):
         assert a == pytest.approx(b, rel=1e-6, abs=1e-9)
 
 
+def test_pagerank_auto_with_checkpoint_skips_local(spark, tmp_path):
+    # a small graph makes "auto" pick the local loop, which keeps no
+    # checkpoints: with checkpoint_dir= or resume=True it must not
+    g = build_graph_tables(spark, edges_df(spark, SMALL_GRAPH_EDGES))
+    ck = str(tmp_path / "ck")
+    first = pagerank(spark, g, spmv="auto", checkpoint_dir=ck, max_iterations=2)
+    assert "local" not in {m.get("mode") for m in first.metrics}
+    assert ParquetCheckpointer(ck, "pagerank").latest().iteration == 1
+    resumed = pagerank(spark, g, spmv="auto", checkpoint_dir=ck, resume=True)
+    assert resumed.converged
+    assert resumed.metrics[0]["i"] == 2
+    assert "local" not in {m.get("mode") for m in resumed.metrics}
+    g.unpersist()
+
+
 def test_checkpoint_metadata_lineage(spark, tmp_path):
     g = build_graph_tables(spark, edges_df(spark, SMALL_GRAPH_EDGES))
     pagerank(spark, g, max_iterations=3, checkpoint_dir=str(tmp_path))

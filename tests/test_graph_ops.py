@@ -3,6 +3,8 @@ vs hand fixtures and the brute-force oracle."""
 
 from __future__ import annotations
 
+from collections import Counter
+
 from pyspark.sql import functions as F
 
 from fixtures.graphs import (
@@ -190,6 +192,31 @@ def test_triangles_local_wedge_chunks_stitch(spark, monkeypatch):
     assert sorted(chunked.per_edge.collect()) == sorted(whole.per_edge.collect())
     assert chunked.total == whole.total
     assert whole.total == oracle.triangle_counts(_post_regex(pairs))[1]
+    g.unpersist()
+
+
+def test_triangles_local_falls_back_above_wedge_budget(spark, monkeypatch):
+    # the oriented wedge count decides: at the budget the driver counts,
+    # one wedge below it the cascade does, with the same rows and total
+    from pagerankproject_spark.graph import triangles
+
+    pairs = make_weblike(seed=9, n_nodes=60, m_edges=300)
+    g = _tables(spark, pairs)
+    below = triangle_counts(spark, g)
+    # sum of C(d+, 2), each edge oriented towards the larger (degree,
+    # url) end (local-build ids are url ranks)
+    simple = {tuple(sorted(e)) for e in _post_regex(pairs) if e[0] != e[1]}
+    deg = Counter(u for e in simple for u in e)
+    outdeg = Counter(min(e, key=lambda u: (deg[u], u)) for e in simple)
+    assert below.mode == "local"
+    assert below.wedges == sum(d * (d - 1) // 2 for d in outdeg.values()) > 0
+    monkeypatch.setattr(triangles, "LOCAL_WEDGE_BUDGET", below.wedges)
+    assert triangle_counts(spark, g).mode == "local"
+    monkeypatch.setattr(triangles, "LOCAL_WEDGE_BUDGET", below.wedges - 1)
+    above = triangle_counts(spark, g)
+    assert (above.mode, above.wedges) == ("distributed", below.wedges)
+    assert sorted(above.per_edge.collect()) == sorted(below.per_edge.collect())
+    assert above.total == below.total
     g.unpersist()
 
 

@@ -176,8 +176,8 @@ def test_local_spmv_guarded_against_max_result_size(spark, monkeypatch):
     """Explicit spmv='local' beyond the maxResultSize budget fails fast
     with a clear message (no opaque Py4J collect error); spmv='auto',
     connected components, label propagation and triangle counting
-    silently take the distributed path instead (one shared guard,
-    graph/local.py)."""
+    silently take the distributed path instead, and so does the build
+    (one shared guard, graph/local.py)."""
     import pagerankproject_spark.graph.pagerank as pr_mod
     from fixtures.graphs import SMALL_GRAPH_EDGES
     from pagerankproject_spark.graph import local
@@ -188,8 +188,8 @@ def test_local_spmv_guarded_against_max_result_size(spark, monkeypatch):
 
     from .conftest import edges_df
 
-    g = build_graph_tables(spark, edges_df(spark, SMALL_GRAPH_EDGES))
     monkeypatch.setattr(local, "_max_result_bytes", lambda _s: 64)
+    g = build_graph_tables(spark, edges_df(spark, SMALL_GRAPH_EDGES))
 
     with pytest.raises(ValueError, match="maxResultSize"):
         pr_mod.pagerank(spark, g, epsilon=1e-6, max_iterations=5, spmv="local")
