@@ -2228,12 +2228,9 @@ def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bpe_merges(_read(spark, sf_dir, "documents"), num_merges=12)
 
 
-def q_bpe_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tokenizer APPLY: train the 12-rule BPE vocabulary then segment
-    every distinct word with it (text/bpe.py::bpe_merges ->
-    ::bpe_encode — the rules applied in rank order as JVM-side folds).
-    Oracle: the same round-unrolled state chain as bpe_merges, final
-    select = the last round's per-word symbol sequences."""
+def _bpe_segmented(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(word, freq, subwords array) per distinct word, segmented with
+    the trained 12-rule vocabulary."""
     from pagerankproject_spark.text.bpe import bpe_encode, bpe_merges
 
     docs = _read(spark, sf_dir, "documents")
@@ -2242,6 +2239,18 @@ def q_bpe_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
         for r in bpe_merges(docs, num_merges=12).orderBy("rank").collect()
     ]
     return bpe_encode(docs, rules)
+
+
+def q_bpe_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Tokenizer APPLY: train the 12-rule BPE vocabulary then segment
+    every distinct word with it (text/bpe.py::bpe_merges ->
+    ::bpe_encode — the rules applied in rank order as JVM-side folds).
+    The subwords are emitted space-joined, so every column is a scalar.
+    Oracle: the same round-unrolled state chain as bpe_merges, final
+    select = the last round's per-word symbol sequences."""
+    return _bpe_segmented(spark, sf_dir).withColumn(
+        "subwords", F.array_join("subwords", " ")
+    )
 
 
 def q_leiden(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2407,7 +2416,7 @@ def q_bpe_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     occurrence) and characters per emitted token — the standard
     tokenizer-quality numbers, computed from the same train-then-
     encode chain as bpe_segment."""
-    seg = q_bpe_segment(spark, sf_dir)
+    seg = _bpe_segmented(spark, sf_dir)
     return seg.select(
         F.lit(1).alias("one"),
         F.col("freq"),

@@ -34,17 +34,28 @@ Lineage is truncated every iteration via localCheckpoint (plan would
 otherwise grow linearly — SURVEY §4.3); durable parquet checkpoints with
 per-partition lineage + metrics (operator #27/#28) every
 `checkpoint_interval` iterations enable resume.
+
+The driver-side modes ("local", "blocks") keep the vertex state as
+float64 numpy on the driver and share one loop (`_driver_loop`) with
+the same equations, metrics and checkpoint layout; only their P^T x
+differs.
 """
 
 from __future__ import annotations
 
 import math
+import shutil
+import tempfile
 import time
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from ..ingest.csr import blocks_spmv, write_npy_blocks
 from ..ingest.edges import GraphTables
 from ..io.checkpoint import ParquetCheckpointer
 from ..session import loop_shuffle_partitions, no_aqe
@@ -92,7 +103,8 @@ def _build_base(
         F.sum(F.col("v_raw")).alias("v_sum"),
         F.sum(F.when(F.col("is_dangling"), 1).otherwise(0)).alias("d_cnt"),
     ).first()
-    assert agg["v_sum"] and agg["v_sum"] > 0, "personalization vector sums to 0"
+    if not (agg["v_sum"] or 0.0) > 0:
+        raise ValueError("personalization vector sums to 0")
     v_l2 = math.sqrt(agg["v_sq"])
     base = base.withColumn("v", F.col("v_raw") / F.lit(v_l2)).drop("v_raw")
     return base, int(agg["d_cnt"])
@@ -120,14 +132,14 @@ def pagerank(
         vertex state (ingest/csr.py NpyBlockSet). Edges stay
         DISTRIBUTED (each task streams only its block from local
         storage/page cache); the rank vector travels in the task
-        closure and the teleport/normalize/residual math runs on the
-        driver with the exact _pagerank_local float64 equations. One
+        closure and the teleport/normalize/residual math runs in the
+        driver-side float64 loop shared with "local". One
         shuffle-free Spark job per iteration whose pipe traffic is P
         part-ids in and ~n doubles out — measured 74M edges/s/iter at
         45M edges on local[32] vs 25-33M for "dataframe" (BENCH.md).
         The mid-scale regime: right whenever the VERTEX state fits one
         machine (n ~ up to tens of millions) while edges don't have
-        to. Checkpoint/resume supported.
+        to.
       * "local" — iterate in-process (numpy scatter-add) over the
         graph's shared driver-local copy (graph/local.py `local_graph`:
         collected once per GraphTables and reused by connected
@@ -137,15 +149,18 @@ def pagerank(
         float64 equations at memory speed (matches the reference's
         single-node throughput at its own scale — BENCH.md). Requires
         the collect to fit maxResultSize (graph/local.py
-        `collect_fits`); checkpoint/resume not supported. Metrics
-        entries carry "mode": "local".
+        `collect_fits`).
       * "auto" — "local" when graph/local.py `runs_local` says the
         graph fits (num_edges <= LOCAL_SPMV_MAX_EDGES and the collect
-        fits maxResultSize — the same decision CC and LPA take) and
-        the call neither checkpoints nor resumes, else
+        fits maxResultSize — the same decision CC and LPA take), else
         "blocks" when the vertex state fits the driver budget, else
         "dataframe".
-    Same numbers in every mode (tested)."""
+    Same numbers in every mode (tested). Every mode checkpoints and
+    resumes, in one layout: a checkpoint written in any mode resumes
+    in any other. Each metrics entry names the SpMV that ran ("mode":
+    "dataframe", "blocks" or "local"), and its "dangling_mass" is x . a
+    of that iteration's new x (the checkpoint records the same value).
+    A personalization vector that sums to 0 raises ValueError."""
     n = g.n
     # Guard the full-edge-table collect BEFORE running any job: an
     # explicit spmv='local' on a large graph would otherwise die mid-
@@ -154,12 +169,10 @@ def pagerank(
     # path instead of raising.
     limit = local._max_result_bytes(spark)
     # blocks mode holds ~5 n-sized float64 arrays on the driver and
-    # collects the n-row base once: budget n*40 B against maxResultSize
+    # collects n-row vectors: budget n*40 B against maxResultSize
     blocks_fits = limit == 0 or 40 * g.n <= limit
     if spmv == "auto":
-        # the local loop keeps no checkpoints, so a checkpointed or
-        # resumed call never picks it
-        if not (checkpoint_dir or resume) and local.runs_local(spark, g):
+        if local.runs_local(spark, g):
             spmv = "local"
         elif blocks_fits:
             spmv = "blocks"
@@ -181,25 +194,18 @@ def pagerank(
             f"raise spark.driver.maxResultSize if the graph truly fits "
             f"driver memory."
         )
-    if spmv == "local":
-        if checkpoint_dir or resume:
-            raise ValueError("spmv='local' does not support checkpoint/resume")
-        return _pagerank_local(
-            spark, g, v_expr, alpha, epsilon, max_iterations, x0_ranks
+    ckpt = ParquetCheckpointer(checkpoint_dir, job_name) if checkpoint_dir else None
+    if spmv in ("local", "blocks"):
+        run = _pagerank_local if spmv == "local" else _pagerank_blocks
+        return run(
+            spark, g, v_expr,
+            alpha=alpha, epsilon=epsilon, max_iterations=max_iterations,
+            x0_ranks=x0_ranks, ckpt=ckpt,
+            checkpoint_interval=checkpoint_interval, resume=resume,
         )
-    if spmv not in ("blocks", "dataframe"):
+    if spmv != "dataframe":
         raise ValueError(f"unknown spmv impl: {spmv}")
     base, d_cnt = _build_base(g, v_expr)
-    if spmv == "blocks":
-        return _pagerank_blocks(
-            spark, g, base, alpha, epsilon, max_iterations, x0_ranks,
-            checkpoint_dir=checkpoint_dir,
-            checkpoint_interval=checkpoint_interval,
-            resume=resume,
-            job_name=job_name,
-        )
-
-    ckpt = ParquetCheckpointer(checkpoint_dir, job_name) if checkpoint_dir else None
 
     start_iter = 0
     residuals: list[float] = []
@@ -281,191 +287,170 @@ def pagerank(
     )
 
 
-def _pagerank_local(
-    spark: SparkSession,
-    g: GraphTables,
-    v_expr: Column | None,
-    alpha: float,
-    epsilon: float,
-    max_iterations: int,
-    x0_ranks: DataFrame | None,
-) -> PageRankResult:
-    """Driver-local iteration over the shared driver copy of the graph
-    (graph/local.py; collected once per GraphTables), then the exact
-    float64 equations of the distributed loop (same as
-    oracle/numpy_ref.power_method) at memory speed. The dangling
-    indicator comes from the edge arrays; only a personalization
-    vector needs a job of its own."""
-    import numpy as np
-    import pandas as pd
+def _dense(df: DataFrame, col: str, n: int, fill: float = 0.0) -> np.ndarray:
+    """Column `col` of an (id, `col`) frame as a length-n float64 vector
+    indexed by id; ids the frame lacks hold `fill`."""
+    pdf = df.select("id", col).toPandas()
+    out = np.full(n, fill, dtype=np.float64)
+    out[pdf["id"].to_numpy()] = pdf[col].to_numpy()
+    return out
 
+
+def _teleport(g: GraphTables, v_expr: Column | None) -> np.ndarray:
+    """Unit-L2 teleport vector v of the driver-side modes: uniform, or
+    the personalization column collected once."""
+    if v_expr is None:
+        return np.full(g.n, 1.0 / math.sqrt(g.n), dtype=np.float64)
+    v = _dense(g.vertices.select("id", v_expr.cast("double").alias("v")), "v", g.n)
+    if not v.sum() > 0:
+        raise ValueError("personalization vector sums to 0")
+    return v / np.linalg.norm(v)
+
+
+def _id_frame(spark: SparkSession, x: np.ndarray) -> DataFrame:
+    return spark.createDataFrame(
+        pd.DataFrame({"id": np.arange(len(x), dtype=np.int64), "x": x})
+    )
+
+
+def _pagerank_local(
+    spark: SparkSession, g: GraphTables, v_expr: Column | None, **loop
+) -> PageRankResult:
+    """P^T x as a numpy scatter-add over the shared driver copy of the
+    graph (graph/local.py; collected once per GraphTables). The
+    dangling indicator comes from the edge arrays; only a
+    personalization vector needs a job of its own."""
     n = g.n
     lg = local.local_graph(g)
     src, dst, w = lg.src, lg.dst, lg.weight
     a = (np.bincount(src, minlength=n) == 0).astype(np.float64)
-    if v_expr is None:
-        v = np.full(n, 1.0 / math.sqrt(n), dtype=np.float64)
-    else:
-        v_pd = g.vertices.select(
-            "id", v_expr.cast("double").alias("v")
-        ).toPandas()
-        v = np.zeros(n, dtype=np.float64)
-        v[v_pd["id"].to_numpy()] = v_pd["v"].to_numpy()
-        if not v.sum() > 0:
-            raise ValueError("personalization vector sums to 0")
-        v = v / np.linalg.norm(v)
 
-    x = np.full(n, 1.0 / math.sqrt(n), dtype=np.float64)
-    if x0_ranks is not None:
-        x0_pd = x0_ranks.toPandas()
-        x[x0_pd["id"].to_numpy()] = x0_pd["x"].to_numpy()
-        x = x / np.linalg.norm(x)
-
-    residuals: list[float] = []
-    metrics: list[dict] = []
-    converged = False
-    for i in range(max_iterations):
-        t0 = time.time()
-        xprev = x
+    def spmv(x: np.ndarray) -> np.ndarray:
         pt_x = np.zeros(n, dtype=np.float64)
         np.add.at(pt_x, dst, w * x[src])
-        dm = float(x @ a)
-        x = alpha * pt_x + (alpha * dm + (1.0 - alpha)) * v
-        x = x / np.linalg.norm(x)
-        residual = float(np.linalg.norm(x - xprev))
-        residuals.append(residual)
-        metrics.append(
-            {"i": i, "residual": residual, "dangling_mass": dm,
-             "edges": g.num_edges, "mode": "local",
-             "wall_sec": time.time() - t0}
-        )
-        if residual < epsilon:
-            converged = True
-            break
+        return pt_x
 
-    ranks = spark.createDataFrame(
-        pd.DataFrame({"id": np.arange(n, dtype=np.int64), "url": lg.url, "x": x}),
-        "id long, url string, x double",
-    )
-    return PageRankResult(
-        ranks=ranks,
-        iterations=len(residuals),
-        residuals=residuals,
-        converged=converged,
-        metrics=metrics,
+    def ranks(x: np.ndarray) -> DataFrame:
+        return spark.createDataFrame(
+            pd.DataFrame({"id": np.arange(n, dtype=np.int64), "url": lg.url, "x": x}),
+            "id long, url string, x double",
+        )
+
+    return _driver_loop(
+        spark, g, spmv, _teleport(g, v_expr), a, "local", ranks, **loop
     )
 
 
 def _pagerank_blocks(
-    spark: SparkSession,
-    g: GraphTables,
-    base: DataFrame,
-    alpha: float,
-    epsilon: float,
-    max_iterations: int,
-    x0_ranks: DataFrame | None,
-    checkpoint_dir: str | None = None,
-    checkpoint_interval: int = 1,
-    resume: bool = False,
-    job_name: str = "pagerank",
+    spark: SparkSession, g: GraphTables, v_expr: Column | None, **loop
 ) -> PageRankResult:
-    """Broadcast-vertex iteration over dst-partitioned on-disk CSR
-    blocks (ingest/csr.py): edges distributed, n-sized vertex state on
-    the driver, exact _pagerank_local float64 equations, one
-    shuffle-free Spark job per iteration. See the `pagerank` docstring
-    for when this mode wins."""
-    import shutil
-    import tempfile
+    """P^T x as one shuffle-free Spark job over dst-partitioned on-disk
+    CSR blocks (ingest/csr.py): edges distributed, n-sized vertex state
+    on the driver. See the `pagerank` docstring for when this mode
+    wins."""
+    v = _teleport(g, v_expr)
+    a = np.ones(g.n, dtype=np.float64)
+    srcs = g.weighted_edges.select("src_id").distinct().toPandas()
+    a[srcs["src_id"].to_numpy()] = 0.0
 
-    import numpy as np
-    import pandas as pd
-
-    from ..ingest.csr import blocks_spmv, write_npy_blocks
-
-    n = g.n
-    base_pd = base.select("id", "v", "is_dangling").toPandas()
-    v = np.zeros(n, dtype=np.float64)
-    v[base_pd["id"].to_numpy()] = base_pd["v"].to_numpy()  # already unit-L2
-    a = np.zeros(n, dtype=np.float64)
-    a[base_pd.loc[base_pd["is_dangling"], "id"].to_numpy()] = 1.0
-
-    ckpt = ParquetCheckpointer(checkpoint_dir, job_name) if checkpoint_dir else None
-    start_iter = 0
-    residuals: list[float] = []
-    x: "np.ndarray | None" = None
-    if ckpt and resume:
-        info = ckpt.latest()
-        if info is not None:
-            ck_pd = ckpt.read(spark, info.iteration).select("id", "x").toPandas()
-            x = np.zeros(n, dtype=np.float64)
-            x[ck_pd["id"].to_numpy()] = ck_pd["x"].to_numpy()
-            start_iter = info.iteration + 1
-            residuals = list(info.metrics.get("residuals", []))
-
-    if x is None:
-        x = np.full(n, 1.0 / math.sqrt(n), dtype=np.float64)
-        if x0_ranks is not None:
-            x0_pd = x0_ranks.toPandas()
-            x[x0_pd["id"].to_numpy()] = x0_pd["x"].to_numpy()
-            x = x / np.linalg.norm(x)
-
-    metrics: list[dict] = []
-    converged = bool(residuals) and residuals[-1] < epsilon
+    def ranks(x: np.ndarray) -> DataFrame:
+        return g.vertices.select("id", "url").join(_id_frame(spark, x), "id")
 
     block_dir = tempfile.mkdtemp(prefix="pr-blocks-")
     blocks = write_npy_blocks(spark, g, block_dir)
     try:
-        for i in range(start_iter, max_iterations):
-            if converged:
-                break
-            t0 = time.time()
-            xprev = x
-            pt_x = blocks_spmv(blocks, x)
-            dm = float(x @ a)
-            x = alpha * pt_x + (alpha * dm + (1.0 - alpha)) * v
-            x = x / np.linalg.norm(x)
-            residual = float(np.linalg.norm(x - xprev))
-            residuals.append(residual)
-            it_metrics = {
-                "i": i,
-                "residual": residual,
-                "dangling_mass": dm,
-                "edges": g.num_edges,
-                "wall_sec": time.time() - t0,
-            }
-            metrics.append(it_metrics)
-            converged = residual < epsilon
-            if ckpt and (
-                converged
-                or i % checkpoint_interval == 0
-                or i == max_iterations - 1
-            ):
-                ranks_pd = pd.DataFrame(
-                    {"id": np.arange(n, dtype=np.int64), "x": x}
-                )
-                ckpt.write(
-                    spark.createDataFrame(ranks_pd),
-                    i,
-                    {
-                        "residual": residual,
-                        "dangling_mass": dm,
-                        "residuals": residuals,
-                        "alpha": alpha,
-                        "epsilon": epsilon,
-                        "n": n,
-                        "edges": g.num_edges,
-                        "wall_sec": it_metrics["wall_sec"],
-                    },
-                )
+        return _driver_loop(
+            spark, g, lambda x: blocks_spmv(blocks, x), v, a, "blocks", ranks,
+            **loop,
+        )
     finally:
         blocks.cleanup()
         shutil.rmtree(block_dir, ignore_errors=True)
 
-    ranks_pd = pd.DataFrame({"id": np.arange(n, dtype=np.int64), "x": x})
-    ranks = spark.createDataFrame(ranks_pd)
-    out = base.select("id", "url").join(ranks, "id")
+
+def _driver_loop(
+    spark: SparkSession,
+    g: GraphTables,
+    spmv: Callable[[np.ndarray], np.ndarray],
+    v: np.ndarray,
+    a: np.ndarray,
+    mode: str,
+    ranks: Callable[[np.ndarray], DataFrame],
+    alpha: float,
+    epsilon: float,
+    max_iterations: int,
+    x0_ranks: DataFrame | None,
+    ckpt: ParquetCheckpointer | None,
+    checkpoint_interval: int,
+    resume: bool,
+) -> PageRankResult:
+    """The power iteration of the driver-side modes: the vertex state
+    is float64 numpy on the driver and `spmv(x)` = P^T x is all that
+    differs between them. The equations are the distributed loop's
+    (and oracle/numpy_ref.power_method's); checkpoints keep the
+    distributed loop's layout and metadata, so any mode resumes from
+    any other's checkpoint. `ranks(x)` is the final ranks frame."""
+    n = g.n
+    start_iter = 0
+    residuals: list[float] = []
+    info = ckpt.latest() if ckpt and resume else None
+    if info is not None:
+        # x . a is recomputed below, not read from the metadata: older
+        # blocks checkpoints store the previous iterate's dangling mass
+        x = _dense(ckpt.read(spark, info.iteration), "x", n)
+        start_iter = info.iteration + 1
+        residuals = list(info.metrics.get("residuals", []))
+    elif x0_ranks is not None:
+        # warm start: unseen vertices get the uniform value (see the
+        # dataframe path)
+        x = _dense(x0_ranks, "x", n, fill=1.0 / math.sqrt(n))
+        x = x / np.linalg.norm(x)
+    else:
+        x = np.full(n, 1.0 / math.sqrt(n), dtype=np.float64)
+
+    metrics: list[dict] = []
+    converged = bool(residuals) and residuals[-1] < epsilon
+    dm = float(x @ a)
+    for i in range(start_iter, max_iterations):
+        if converged:
+            break
+        t0 = time.time()
+        xprev = x
+        x = alpha * spmv(x) + (alpha * dm + (1.0 - alpha)) * v
+        x = x / np.linalg.norm(x)
+        dm = float(x @ a)
+        residual = float(np.linalg.norm(x - xprev))
+        residuals.append(residual)
+        it_metrics = {
+            "i": i,
+            "residual": residual,
+            "dangling_mass": dm,
+            "edges": g.num_edges,
+            "mode": mode,
+            "wall_sec": time.time() - t0,
+        }
+        metrics.append(it_metrics)
+        converged = residual < epsilon
+        if ckpt and (
+            converged or i % checkpoint_interval == 0 or i == max_iterations - 1
+        ):
+            ckpt.write(
+                _id_frame(spark, x),
+                i,
+                {
+                    "residual": residual,
+                    "dangling_mass": dm,
+                    "residuals": residuals,
+                    "alpha": alpha,
+                    "epsilon": epsilon,
+                    "n": n,
+                    "edges": g.num_edges,
+                    "wall_sec": it_metrics["wall_sec"],
+                },
+            )
+
     return PageRankResult(
-        ranks=out,
+        ranks=ranks(x),
         iterations=len(residuals),
         residuals=residuals,
         converged=converged,
@@ -545,6 +530,7 @@ def _run_loop(
             "residual": residual,
             "dangling_mass": dm,
             "edges": g.num_edges,
+            "mode": "dataframe",
             "wall_sec": time.time() - t0,
         }
         metrics.append(it_metrics)

@@ -432,14 +432,15 @@ def sql_bpe_segment(
     LAST round's symbol rows — each word's segmentation after all
     merges — instead of the merge list. Early-stopped rounds pass the
     state through unchanged (empty ``best{i}``), so an engine run that
-    found fewer than ``num_merges`` rules still matches."""
+    found fewer than ``num_merges`` rules still matches. Subwords are
+    space-joined, as the engine's ``bpe_segment`` key emits them."""
     inner = sql_bpe_merges(rel, num_merges, text_col, min_count, lowercase)
     # the shared state chain is everything before the merge-list union
     head = inner[: inner.index("\nselect 0 as rank")]
     return (
         head
         + f"""
-select word, freq, list(sym order by pos) as subwords
+select word, freq, string_agg(sym, ' ' order by pos) as subwords
 from s{num_merges}
 group by word, freq"""
     )

@@ -46,18 +46,25 @@ def test_pagerank_resume_identical(spark, tmp_path):
         assert a == pytest.approx(b, rel=1e-6, abs=1e-9)
 
 
-def test_pagerank_auto_with_checkpoint_skips_local(spark, tmp_path):
-    # a small graph makes "auto" pick the local loop, which keeps no
-    # checkpoints: with checkpoint_dir= or resume=True it must not
+def test_pagerank_auto_checkpoints_and_resumes_locally(spark, tmp_path):
+    # a small graph makes "auto" pick the local loop, which checkpoints
+    # and resumes like the distributed one
     g = build_graph_tables(spark, edges_df(spark, SMALL_GRAPH_EDGES))
+    full = pagerank(spark, g, spmv="auto")
+    want = {r["url"]: r["x"] for r in full.ranks.collect()}
     ck = str(tmp_path / "ck")
     first = pagerank(spark, g, spmv="auto", checkpoint_dir=ck, max_iterations=2)
-    assert "local" not in {m.get("mode") for m in first.metrics}
+    assert {m["mode"] for m in first.metrics} == {"local"}
     assert ParquetCheckpointer(ck, "pagerank").latest().iteration == 1
     resumed = pagerank(spark, g, spmv="auto", checkpoint_dir=ck, resume=True)
     assert resumed.converged
     assert resumed.metrics[0]["i"] == 2
-    assert "local" not in {m.get("mode") for m in resumed.metrics}
+    assert {m["mode"] for m in resumed.metrics} == {"local"}
+    assert resumed.iterations == full.iterations
+    got = {r["url"]: r["x"] for r in resumed.ranks.collect()}
+    assert set(got) == set(want)
+    for url, val in want.items():
+        assert abs(got[url] - val) < 1e-12, url
     g.unpersist()
 
 

@@ -10,6 +10,10 @@ engines read, so the comparison is exactly check_contract's
 Keys chosen to cover every table family while staying robust to
 thinning (no minimum-cardinality fail-fasts like PQ's ksub anchor
 requirement) and fast at sf0.001.
+
+The last tests cover check_contract's own guards: the nested-type
+schema check, the bounded DuckDB connection, and the `bpe_segment` key
+the schema check used to reject (it emitted an array).
 """
 
 from __future__ import annotations
@@ -22,6 +26,15 @@ import duckdb
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql.types import (
+    ArrayType,
+    DoubleType,
+    LongType,
+    MapType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 REPO = Path(__file__).resolve().parents[1]
 if str(REPO) not in sys.path:
@@ -114,3 +127,44 @@ def test_contract_key_on_random_slice(spark, sliced_sf, key):
     assert sorted(sdf.columns) == sorted(odf.columns)
     assert len(sdf) == len(odf), (key, len(sdf), len(odf))
     assert _cc.rows_key(sdf) == _cc.rows_key(odf), key
+
+
+def test_nested_columns_flags_array_map_and_struct():
+    schema = StructType(
+        [
+            StructField("id", LongType()),
+            StructField("tokens", ArrayType(StringType())),
+            StructField("counts", MapType(StringType(), LongType())),
+            StructField("pos", StructType([StructField("x", DoubleType())])),
+            StructField("word", StringType()),
+        ]
+    )
+    assert _cc.nested_columns(schema) == ["tokens", "counts", "pos"]
+    assert _cc.nested_columns(StructType(schema.fields[::4])) == []
+
+
+def test_duckdb_connect_is_bounded(tmp_path):
+    con = _cc.duckdb_connect(str(tmp_path))
+    mem, spill, cap = con.execute(
+        "select current_setting('memory_limit'), "
+        "current_setting('temp_directory'), "
+        "current_setting('max_temp_directory_size')"
+    ).fetchone()
+    assert spill == str(tmp_path)
+    assert mem.endswith("iB") and cap.endswith("iB")
+    con.close()
+
+
+def test_bpe_segment_emits_scalars_and_matches_oracle(spark, tmp_path):
+    df = _cc.entrymod.queries()["bpe_segment"](spark, SRC_SF)
+    assert _cc.nested_columns(df.schema) == []
+    sdf = df.toPandas()
+    con = _cc.duckdb_connect(str(tmp_path))
+    for t in _cc.TABLES:
+        con.execute(
+            f"create view {t} as select * from read_parquet('{SRC_SF}/{t}.parquet')"
+        )
+    odf = con.execute(_cc.entrymod.oracle_sql()["bpe_segment"]).df()
+    assert sorted(sdf.columns) == sorted(odf.columns)
+    assert len(sdf) > 0
+    assert _cc.rows_key(sdf) == _cc.rows_key(odf)

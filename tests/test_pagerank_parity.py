@@ -143,32 +143,84 @@ def test_blocks_spmv_matches_dataframe_and_goldens(spark):
 
 
 def test_blocks_spmv_checkpoint_resume(spark, tmp_path):
-    """blocks mode writes the same checkpoint protocol as the
-    distributed loop and resumes to an identical fixpoint."""
+    """Every mode writes one checkpoint protocol and resumes from any
+    mode's checkpoint: for each (writer, resumer) pair over
+    {dataframe, blocks, local}, a run interrupted after 4 iterations and
+    resumed in the other mode gives the resumer's uninterrupted
+    iteration count, residuals and fixpoint. The checkpointed dangling
+    mass must be x . a of the checkpointed x, or a dataframe resume
+    starts from a wrong teleport term."""
+    import shutil
+
     from pagerankproject_spark.graph.pagerank import pagerank
     from pagerankproject_spark.ingest.edges import build_graph_tables
 
+    modes = ("dataframe", "blocks", "local")
     pairs = make_weblike(seed=17, n_nodes=100, m_edges=600)
     g = build_graph_tables(spark, edges_df(spark, pairs))
-    ck = str(tmp_path / "ck")
 
-    full = pagerank(spark, g, epsilon=1e-6, max_iterations=1000, spmv="blocks")
-    # run 1: stop early, checkpointing every iteration
-    pagerank(
-        spark, g, epsilon=1e-6, max_iterations=4, spmv="blocks",
-        checkpoint_dir=ck, checkpoint_interval=1,
-    )
-    # run 2: resume to convergence
-    resumed = pagerank(
-        spark, g, epsilon=1e-6, max_iterations=1000, spmv="blocks",
-        checkpoint_dir=ck, checkpoint_interval=1, resume=True,
-    )
-    assert resumed.converged
-    assert resumed.iterations == full.iterations
-    a = {r["url"]: r["x"] for r in full.ranks.collect()}
-    b = {r["url"]: r["x"] for r in resumed.ranks.collect()}
-    for url in a:
-        assert abs(a[url] - b[url]) < 1e-12, url
+    full = {}
+    for mode in modes:
+        res = pagerank(spark, g, epsilon=1e-10, max_iterations=1000, spmv=mode)
+        full[mode] = (res, {r["url"]: r["x"] for r in res.ranks.collect()})
+    for writer in modes:
+        # run 1: stop early, checkpointing every iteration
+        ck = str(tmp_path / writer)
+        pagerank(
+            spark, g, epsilon=1e-10, max_iterations=4, spmv=writer,
+            checkpoint_dir=ck, checkpoint_interval=1,
+        )
+        for mode in modes:
+            # run 2: resume to convergence from a copy of run 1's state,
+            # checkpointing only at the end
+            pair_ck = str(tmp_path / f"{writer}-{mode}")
+            shutil.copytree(ck, pair_ck)
+            resumed = pagerank(
+                spark, g, epsilon=1e-10, max_iterations=1000, spmv=mode,
+                checkpoint_dir=pair_ck, checkpoint_interval=1000, resume=True,
+            )
+            want, want_ranks = full[mode]
+            pair = (writer, mode)
+            assert resumed.converged, pair
+            assert resumed.metrics[0]["i"] == 4, pair
+            assert {m["mode"] for m in resumed.metrics} == {mode}, pair
+            assert resumed.iterations == want.iterations, pair
+            for i, (a, b) in enumerate(zip(resumed.residuals, want.residuals)):
+                assert a == pytest.approx(b, rel=1e-6, abs=1e-9), (pair, i)
+            got = {r["url"]: r["x"] for r in resumed.ranks.collect()}
+            assert set(got) == set(want_ranks), pair
+            for url, val in want_ranks.items():
+                assert abs(got[url] - val) < 1e-12, (pair, url)
+    g.unpersist()
+
+
+def test_auto_spmv_records_its_pick(spark):
+    """Every metrics entry names the SpMV that ran, so `auto`'s choice
+    is visible: local below the shared threshold, blocks above it."""
+    from pagerankproject_spark.graph.pagerank import pagerank
+    from pagerankproject_spark.ingest.edges import build_graph_tables
+
+    from .conftest import forced_distributed
+
+    g = build_graph_tables(spark, edges_df(spark, SMALL_GRAPH_EDGES))
+    res = pagerank(spark, g, max_iterations=3, spmv="auto")
+    assert {m["mode"] for m in res.metrics} == {"local"}
+    with forced_distributed():
+        res = pagerank(spark, g, max_iterations=3, spmv="auto")
+    assert {m["mode"] for m in res.metrics} == {"blocks"}
+    g.unpersist()
+
+
+@pytest.mark.parametrize("mode", ["dataframe", "blocks", "local"])
+def test_zero_personalization_raises_in_every_mode(spark, mode):
+    from pyspark.sql import functions as F
+
+    from pagerankproject_spark.graph.pagerank import pagerank
+    from pagerankproject_spark.ingest.edges import build_graph_tables
+
+    g = build_graph_tables(spark, edges_df(spark, SMALL_GRAPH_EDGES))
+    with pytest.raises(ValueError, match="personalization vector sums to 0"):
+        pagerank(spark, g, v_expr=F.lit(0.0), spmv=mode)
     g.unpersist()
 
 
@@ -197,6 +249,7 @@ def test_local_spmv_guarded_against_max_result_size(spark, monkeypatch):
     res = pr_mod.pagerank(spark, g, epsilon=1e-6, max_iterations=5, spmv="auto")
     assert res.ranks.count() == g.n  # fell back to the distributed loop
     assert "local" not in {m.get("mode") for m in res.metrics}
+    assert {m["mode"] for m in res.metrics} == {"dataframe"}
     cc = connected_components(spark, g, max_iterations=2)
     lpa = label_propagation(spark, g, max_iterations=2)
     for r in (cc, lpa):

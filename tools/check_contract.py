@@ -5,6 +5,11 @@ oracle_sql() twin on DuckDB against the same sf dir, then compares
 row count, column names, and an order-insensitive value multiset
 (strict equality after canonical stringification — stricter than any
 plausible driver hash, so passing here should mean passing there).
+A key whose Spark schema holds an array, map or struct column fails:
+the driver hashes scalar columns only. DuckDB runs within a quarter of
+physical memory and spills to a temporary directory, at most a quarter
+of its free disk; an oracle over that budget is a FAIL and the run goes
+on.
 
 Usage: python tools/check_contract.py [sf_dir] [only_query ...]
 """
@@ -12,11 +17,15 @@ Usage: python tools/check_contract.py [sf_dir] [only_query ...]
 from __future__ import annotations
 
 import math
+import os
+import shutil
 import sys
+import tempfile
 import time
 from pathlib import Path
 
 import duckdb
+from pyspark.sql.types import ArrayType, MapType, StructType
 
 REPO = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(REPO))
@@ -53,11 +62,37 @@ def rows_key(df) -> list[str]:
     return out
 
 
+def nested_columns(schema: StructType) -> list[str]:
+    """Columns of `schema` whose type is an array, map or struct."""
+    return [
+        f.name
+        for f in schema.fields
+        if isinstance(f.dataType, (ArrayType, MapType, StructType))
+    ]
+
+
+def duckdb_connect(spill_dir: str) -> duckdb.DuckDBPyConnection:
+    """DuckDB bounded by this machine: a quarter of physical memory,
+    spilling into `spill_dir` up to a quarter of its free disk."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    free = shutil.disk_usage(spill_dir).free
+    return duckdb.connect(
+        config={
+            "memory_limit": f"{ram // 4 >> 20}MB",
+            "temp_directory": spill_dir,
+            "max_temp_directory_size": f"{free // 4 >> 20}MB",
+        }
+    )
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
+    with tempfile.TemporaryDirectory(prefix="check-contract-duckdb-") as spill:
+        return check(sf_dir, only, duckdb_connect(spill))
 
-    con = duckdb.connect()
+
+def check(sf_dir: str, only: set[str], con: duckdb.DuckDBPyConnection) -> int:
     for t in TABLES:
         con.execute(
             f"create view {t} as select * from read_parquet('{sf_dir}/{t}.parquet')"
@@ -73,7 +108,13 @@ def main() -> int:
             continue
         t0 = time.time()
         try:
-            sdf = fn(spark, sf_dir).toPandas()
+            df = fn(spark, sf_dir)
+            nested = nested_columns(df.schema)
+            if nested:
+                failures.append(name)
+                print(f"FAIL {name}: nested columns {nested}; emit scalars")
+                continue
+            sdf = df.toPandas()
         except Exception as e:
             failures.append(name)
             print(f"FAIL {name}: SPARK ERROR {type(e).__name__}: {str(e)[:400]}")
